@@ -236,7 +236,7 @@ def _hot_guard_seconds(spark, sf_dir: str) -> float:
     from pyspark.sql import functions as F
 
     from evolution_data_warehouse_spark.operators.dedup import minhash_lsh_pairs
-    from evolution_data_warehouse_spark.queries.llm_ops import _doc_shingles
+    from evolution_data_warehouse_spark.queries.common import doc_shingles
 
     btoks = "common boiler plate text repeated everywhere in this corpus".split()
     bsh = [" ".join(btoks[i : i + 3]) for i in range(len(btoks) - 2)]
@@ -244,7 +244,7 @@ def _hot_guard_seconds(spark, sf_dir: str) -> float:
         (F.lit(10**12) + F.col("id")).alias("doc_id"),
         F.explode(F.array(*[F.lit(s) for s in bsh])).alias("shingle"),
     )
-    shingled = _doc_shingles(spark, sf_dir).unionByName(boiler)
+    shingled = doc_shingles(spark, sf_dir).unionByName(boiler)
     # warm plan/codegen, then steady-state timing — sig_storage="cache"
     # so the number is apples-to-apples with the dedup_minhash_lsh
     # headline line (same signature lifecycle)
@@ -268,9 +268,7 @@ def _bpe_encode_seconds(spark, sf_dir: str) -> float:
         bpe_vocab,
     )
     from evolution_data_warehouse_spark.queries.common import t
-    from evolution_data_warehouse_spark.queries.extensions_r8 import (
-        _BPE_MERGES,
-    )
+    from evolution_data_warehouse_spark.queries.text import _BPE_MERGES
 
     def run():
         bpe_encode_ids(
@@ -340,7 +338,7 @@ def _shingle_guard_seconds(spark, sf_dir: str) -> float:
         cap_shingle_df,
         content_hash64,
     )
-    from evolution_data_warehouse_spark.queries.llm_ops import _doc_shingles
+    from evolution_data_warehouse_spark.queries.common import doc_shingles
 
     btoks = "common boiler plate text repeated everywhere in this corpus".split()
     bsh = [" ".join(btoks[i : i + 3]) for i in range(len(btoks) - 2)]
@@ -348,7 +346,7 @@ def _shingle_guard_seconds(spark, sf_dir: str) -> float:
         (F.lit(10**12) + F.col("id")).alias("doc_id"),
         F.explode(F.array(*[F.lit(s) for s in bsh])).alias("shingle"),
     )
-    shingled = _doc_shingles(spark, sf_dir).unionByName(boiler)
+    shingled = doc_shingles(spark, sf_dir).unionByName(boiler)
 
     def _pairs():
         sh = cap_shingle_df(

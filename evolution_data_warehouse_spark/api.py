@@ -14,6 +14,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from evolution_data_warehouse_spark.sources.staging import tables_summary
+
 DEFAULT_LIMIT = 100
 MAX_LIMIT = 1000
 
@@ -32,14 +34,16 @@ class TableReadAPI:
         return [row.asDict(recursive=True) for row in df.collect()]
 
     def summary(self) -> list[dict]:
-        """GET /tables/summary — name + row/column counts."""
-        out = []
-        for name in sorted(self.allowed):
-            df = self.spark.table(name)
-            out.append(
-                {"table": name, "n_rows": df.count(), "n_cols": len(df.columns)}
-            )
-        return out
+        """GET /tables/summary — name + row/column counts, all tables
+        counted in one Spark job."""
+        if not self.allowed:
+            return []
+        tables = {name: self.spark.table(name) for name in self.allowed}
+        rows = sorted(tables_summary(tables).collect(), key=lambda r: r.table_name)
+        return [
+            {"table": r.table_name, "n_rows": r.n_rows, "n_cols": r.n_cols}
+            for r in rows
+        ]
 
     def wsgi_app(self, environ, start_response):
         """Minimal WSGI surface: /tables/summary and /tables/<name>."""

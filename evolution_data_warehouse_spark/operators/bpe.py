@@ -31,7 +31,7 @@ pure-Python reference implementation on the same word counts
 k-round argmax recursion is not expressible as one ANSI-SQL oracle,
 the same status as PageRank — and the registry's driver-level
 evidence for the tokenizer family is `tok_bpe_segment`
-(queries/extensions_r8.py), which applies a pinned merge table
+(queries/text.py), which applies a pinned merge table
 learned by this trainer under an exact DuckDB oracle.
 
 Reference-parity note: haelbrek/Evolution-DATA-WAREHOUSE has no
@@ -230,18 +230,4 @@ def bpe_encode_ids(
             F.col("z.subs").alias("subword"),
             F.col("z.ids").cast("int").alias("token_id"),
         )
-    )
-
-
-def bpe_train_df(
-    docs: DataFrame, text_col: str = "text", n_merges: int = 10
-) -> DataFrame:
-    """bpe_train as a DataFrame: (rank, left, right, merged, cnt)."""
-    spark = docs.sparkSession
-    rows = [
-        (r, a, b, a + b, c)
-        for r, a, b, c in bpe_train(docs, text_col, n_merges)
-    ]
-    return spark.createDataFrame(
-        rows, "rank int, left string, right string, merged string, cnt bigint"
     )

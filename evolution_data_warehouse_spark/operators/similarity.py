@@ -482,7 +482,13 @@ def _neighbor_counts_grouped(
       the rank comparator mirrors that ordering explicitly;
     * a zero norm product is excluded (``nullif`` → NULL in the JVM);
     * vectors of different lengths never pair (zip_with pads with NULL
-      → NULL dot), so slices are processed per distinct dimension.
+      → NULL dot), so slices are processed per distinct dimension;
+    * ids pair only with DIFFERENT ids (the join's ``_ida != _idb``; a
+      NULL id pairs with nothing) and counts are summed per distinct
+      id, the join's ``groupBy("_ida")`` — duplicate ids inside a slice
+      yield one output row, so the final join cannot fan out. (A
+      duplicated id split across two labels still yields one row per
+      label.)
     """
     import numpy as np
     import pandas as pd
@@ -502,6 +508,7 @@ def _neighbor_counts_grouped(
             V = np.stack([a for a, s in zip(arrs, sel) if s])
             sub = work[sel]
             ids = sub[id_col].to_numpy()
+            id_ok = ~pd.isna(ids)
             ccv = sub["_cc"].to_numpy(dtype="float64")
             norms = sub["_norm"].to_numpy(dtype="float64")
             n = V.shape[0]
@@ -523,8 +530,8 @@ def _neighbor_counts_grouped(
                     lt = ccv < ci
                     eq = ccv == ci
                 qual &= lt | (eq & (ids < ids[i]))
-                qual[i] = False
-                c = int(np.count_nonzero(qual))
+                qual &= id_ok & (ids != ids[i])
+                c = int(np.count_nonzero(qual)) if id_ok[i] else 0
                 if c:
                     out_ids.append(ids[i])
                     out_counts.append(c)
@@ -535,7 +542,8 @@ def _neighbor_counts_grouped(
                     "_n_better": pd.Series(dtype="int64"),
                 }
             )
-        return pd.DataFrame({"_ida": out_ids, "_n_better": out_counts})
+        out = pd.DataFrame({"_ida": out_ids, "_n_better": out_counts})
+        return out.groupby("_ida", as_index=False, sort=False)["_n_better"].sum()
 
     slim = guarded.select(
         label_col,

@@ -69,6 +69,28 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.concat_ws(" ", toks))
 
 
+def word_ngrams(tokens: Column, k: int, distinct: bool = False) -> Column:
+    """All k-token word n-grams of a tokens array, space-joined, in
+    order: ``size(tokens) - k + 1`` strings, or an empty array when the
+    document has fewer than k tokens. The single builder for every word
+    shingle, bigram and n-gram feature (dedup shingles, decontamination,
+    bigram statistics, the streaming dedup index), so no two consumers
+    can tokenize differently; :func:`k_gram_windows` below is the
+    position-keyed form the span-dedup family needs. ``distinct``
+    deduplicates inside the length guard (the n-gram novelty shape);
+    the shingle callers wrap the result in ``array_distinct`` instead."""
+    n = F.size(tokens)
+    grams = F.transform(
+        F.sequence(F.lit(0), n - k),
+        lambda i: F.concat_ws(
+            " ", *(F.element_at(tokens, i + j) for j in range(1, k + 1))
+        ),
+    )
+    if distinct:
+        grams = F.array_distinct(grams)
+    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
+
+
 def k_gram_windows(tokens: Column, k: int) -> Column:
     """All k-token sliding windows of a tokens array, joined with a
     single space — array of length ``size(tokens) - k + 1``. The single

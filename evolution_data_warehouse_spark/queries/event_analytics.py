@@ -1,5 +1,6 @@
 """Event-analytics family over the events table: funnel conversion,
-cohort retention, forward-fill, and time-spine resampling — the
+cohort retention, forward-fill, time-spine resampling, sessions,
+transition and attribution models, stickiness and churn — the
 product-analytics queries a warehouse's event stream serves (reference
 analog: the connection/usage tracking marts,
 analytics/etl/track_connexions.py + Terraform/sql/005 datamart shapes,
@@ -12,15 +13,18 @@ fully tie-broken by event_id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from evolution_data_warehouse_spark.queries.common import (
+    SESSION_GAP_US,
     dsum,
     dsum_sql,
     fpq,
     fpq_sql,
     register,
+    session_oracle,
     t,
 )
 
@@ -506,4 +510,1178 @@ def win_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("streak_days"),
         )
         .drop("island_key")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Engagement stickiness (DAU / WAU)
+# ---------------------------------------------------------------------------
+
+_STICKY_ORACLE = f"""
+WITH day_users AS (
+    SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events
+),
+dau AS (SELECT day, COUNT(*) AS dau FROM day_users GROUP BY day),
+spread AS (
+    SELECT day + CAST(unnest(range(0, 7)) AS INT) AS wday, user_id FROM day_users
+),
+wau AS (
+    SELECT wday AS day, COUNT(DISTINCT user_id) AS wau
+    FROM spread GROUP BY wday
+)
+SELECT d.day, d.dau, w.wau,
+       {fpq_sql('CAST(d.dau AS DOUBLE) / CAST(w.wau AS DOUBLE)')}
+           AS stickiness
+FROM dau d JOIN wau w ON d.day = w.day
+"""
+
+
+@register(
+    "event_stickiness",
+    _STICKY_ORACLE,
+    doc="DAU/WAU stickiness per day: the engagement ratio computed by "
+    "SPREADING each (user, day) over the 7 trailing windows it "
+    "belongs to — a 7× row expansion of the user-day grain, then two "
+    "hash aggregates — instead of a per-day distinct re-scan of the "
+    "week (O(days·events), the trap). Days trailing past the data's "
+    "edge drop out via the inner join. Counts exact, ratio "
+    "fixed-point quantized.",
+)
+def event_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    day_users = (
+        t(spark, sf_dir, "events")
+        .select(F.to_date("ts").alias("day"), "user_id")
+        .distinct()
+    )
+    dau = day_users.groupBy("day").agg(F.count("*").alias("dau"))
+    spread = day_users.select(
+        F.explode(F.sequence(F.lit(0), F.lit(6))).alias("i"),
+        "day", "user_id",
+    ).select(F.date_add("day", F.col("i")).alias("day"), "user_id")
+    wau = spread.groupBy("day").agg(F.countDistinct("user_id").alias("wau"))
+    return dau.join(wau, "day").select(
+        "day", "dau", "wau",
+        fpq(F.col("dau").cast("double") / F.col("wau").cast("double")).alias(
+            "stickiness"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Monthly churn (active in M, absent in M+1)
+# ---------------------------------------------------------------------------
+
+_CHURN_ORACLE = """
+WITH mu AS (
+    SELECT DISTINCT date_trunc('month', ts) AS month, user_id FROM events
+),
+months AS (SELECT DISTINCT month FROM mu),
+churned AS (
+    SELECT a.month, COUNT(*) AS n_churned
+    FROM mu a
+    WHERE NOT EXISTS (
+        SELECT 1 FROM mu b
+        WHERE b.user_id = a.user_id
+          AND b.month = a.month + INTERVAL 1 MONTH
+    )
+    AND EXISTS (SELECT 1 FROM months m
+                WHERE m.month = a.month + INTERVAL 1 MONTH)
+    GROUP BY a.month
+),
+active AS (SELECT month, COUNT(*) AS n_active FROM mu GROUP BY month)
+SELECT CAST(a.month AS TIMESTAMP) AS month, a.n_active,
+       COALESCE(c.n_churned, 0) AS n_churned
+FROM active a
+LEFT JOIN churned c ON a.month = c.month
+WHERE EXISTS (SELECT 1 FROM months m
+              WHERE m.month = a.month + INTERVAL 1 MONTH)
+"""
+
+
+@register(
+    "event_churn_monthly",
+    _CHURN_ORACLE,
+    doc="Monthly churn: users active in month M with no activity in "
+    "M+1, reported beside the month's active count (the retention "
+    "complement of cohort_retention). Computed at the month-user "
+    "grain — one distinct, one self-anti-join on (user, next month) — "
+    "never a raw-event comparison; the final data month is excluded "
+    "(churn there is undefined, not zero).",
+)
+def event_churn_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    mu = (
+        t(spark, sf_dir, "events")
+        .select(F.date_trunc("month", "ts").alias("month"), "user_id")
+        .distinct()
+    )
+    months = mu.select("month").distinct()
+    nxt = mu.select(
+        F.add_months(F.col("month"), -1).alias("month"),
+        F.col("user_id").alias("u2"),
+    )
+    churned = (
+        mu.join(
+            nxt,
+            (mu.month == nxt.month) & (mu.user_id == nxt.u2),
+            "left_anti",
+        )
+        .groupBy("month")
+        .agg(F.count("*").alias("n_churned"))
+    )
+    active = mu.groupBy("month").agg(F.count("*").alias("n_active"))
+    has_next = months.alias("m1").join(
+        months.select(F.add_months("month", -1).alias("month")).alias("m2"),
+        "month",
+        "left_semi",
+    )
+    return (
+        active.join(F.broadcast(has_next), "month", "left_semi")
+        .join(churned, "month", "left")
+        .select(
+            "month", "n_active",
+            F.coalesce("n_churned", F.lit(0)).cast("long").alias("n_churned"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Transition latency (inter-event time per transition type)
+# ---------------------------------------------------------------------------
+
+_TRANS_LAT_ORACLE = f"""
+WITH seq AS (
+    SELECT user_id, event_type AS prev_type, ts,
+           lead(event_type) OVER w AS next_type,
+           lead(ts) OVER w AS next_ts
+    FROM events
+    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+),
+lat AS (
+    SELECT prev_type, next_type,
+           (epoch_us(next_ts) - epoch_us(ts)) / 1000000.0 AS secs
+    FROM seq WHERE next_type IS NOT NULL
+)
+SELECT prev_type, next_type, COUNT(*) AS n,
+       {fpq_sql('quantile_cont(secs, 0.5)')} AS median_secs,
+       {fpq_sql('quantile_cont(secs, 0.9)')} AS p90_secs
+FROM lat GROUP BY prev_type, next_type
+"""
+
+
+@register(
+    "event_transition_latency",
+    _TRANS_LAT_ORACLE,
+    doc="Inter-event latency per transition type (how long from view "
+    "to click?): the timing companion to event_transition_matrix. One "
+    "lead() pass over the user partitioning, then exact interpolated "
+    "percentiles per transition pair, fixed-point quantized; seconds "
+    "derive from integer epoch-µs divided once.",
+)
+def event_transition_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = t(spark, sf_dir, "events").select(
+        F.col("event_type").alias("prev_type"),
+        "ts",
+        F.lead("event_type").over(w).alias("next_type"),
+        F.lead("ts").over(w).alias("next_ts"),
+    )
+    secs = (
+        (F.unix_micros("next_ts") - F.unix_micros("ts")) / F.lit(1000000.0)
+    )
+    lat = seq.filter(F.col("next_type").isNotNull()).select(
+        "prev_type", "next_type", secs.alias("secs")
+    )
+    return lat.groupBy("prev_type", "next_type").agg(
+        F.count("*").alias("n"),
+        fpq(F.percentile("secs", F.lit(0.5))).alias("median_secs"),
+        fpq(F.percentile("secs", F.lit(0.9))).alias("p90_secs"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Behavioral path mining: top first-3-event paths per user-day
+# ---------------------------------------------------------------------------
+
+_PATHS_ORACLE = """
+WITH ranked AS (
+    SELECT user_id, CAST(ts AS DATE) AS day, event_type,
+           ROW_NUMBER() OVER (
+               PARTITION BY user_id, CAST(ts AS DATE)
+               ORDER BY ts, event_id
+           ) AS rn
+    FROM events
+),
+paths AS (
+    SELECT user_id, day,
+           MAX(CASE WHEN rn = 1 THEN event_type END) || '>' ||
+           MAX(CASE WHEN rn = 2 THEN event_type END) || '>' ||
+           MAX(CASE WHEN rn = 3 THEN event_type END) AS path
+    FROM ranked WHERE rn <= 3
+    GROUP BY user_id, day
+    HAVING COUNT(*) >= 3
+)
+SELECT path, COUNT(*) AS n_sessions
+FROM paths GROUP BY path
+ORDER BY n_sessions DESC, path
+LIMIT 20
+"""
+
+
+@register(
+    "seq_top_paths",
+    _PATHS_ORACLE,
+    doc="Top-20 opening event paths (first 3 events per user-day, "
+    "tie-broken by event_id) — the sequence-mining primitive behind "
+    "onboarding/funnel design. The per-group ordering is a window "
+    "ranked within (user, day) partitions; the path string is built "
+    "with positional conditional MAXes (exact, no ordered collect), "
+    "and the final top-N is fully tie-broken (count desc, path) so "
+    "LIMIT is deterministic. Compiles to WindowGroupLimit-friendly "
+    "shapes; the heavy shuffle is user-day cardinality, not events.",
+)
+def seq_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = t(spark, sf_dir, "events").select(
+        "user_id", F.to_date("ts").alias("day"), "event_type", "ts", "event_id"
+    )
+    w = W.partitionBy("user_id", "day").orderBy("ts", "event_id")
+    ranked = ev.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= 3
+    )
+
+    def step(i: int) -> Column:
+        return F.max(F.when(F.col("rn") == i, F.col("event_type")))
+
+    paths = (
+        ranked.groupBy("user_id", "day")
+        .agg(
+            step(1).alias("s1"),
+            step(2).alias("s2"),
+            step(3).alias("s3"),
+            F.count("*").alias("n"),
+        )
+        .filter(F.col("n") >= 3)
+        .select(
+            F.concat_ws(">", "s1", "s2", "s3").alias("path")
+        )
+    )
+    return (
+        paths.groupBy("path")
+        .agg(F.count("*").alias("n_sessions"))
+        .orderBy(F.col("n_sessions").desc(), "path")
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Session duration percentiles (30-min gap sessionization)
+# ---------------------------------------------------------------------------
+
+_SESSDUR_ORACLE = f"""
+WITH e AS (
+    SELECT user_id, event_id, epoch_us(ts) AS us,
+           CASE WHEN epoch_us(ts)
+                     - LAG(epoch_us(ts)) OVER (
+                           PARTITION BY user_id ORDER BY ts, event_id
+                       ) > 1800000000
+                  OR LAG(epoch_us(ts)) OVER (
+                         PARTITION BY user_id ORDER BY ts, event_id
+                     ) IS NULL
+                THEN 1 ELSE 0 END AS marker
+    FROM events
+),
+s AS (
+    SELECT user_id, us,
+           SUM(marker) OVER (
+               PARTITION BY user_id ORDER BY us, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS session_id
+    FROM e
+),
+dur AS (
+    SELECT user_id, session_id, MAX(us) - MIN(us) AS dur_us
+    FROM s GROUP BY user_id, session_id
+)
+SELECT COUNT(*) AS n_sessions,
+       {fpq_sql('quantile_cont(dur_us, 0.5) / 1e6')} AS p50_s,
+       {fpq_sql('quantile_cont(dur_us, 0.9) / 1e6')} AS p90_s,
+       {fpq_sql('quantile_cont(dur_us, 0.99) / 1e6')} AS p99_s
+FROM dur
+"""
+
+
+@register(
+    "session_duration_pct",
+    _SESSDUR_ORACLE,
+    doc="Session-duration percentiles over 30-min-gap sessionization "
+    "(the engagement-depth KPI next to win_session_gap's session ids): "
+    "exact integer-µs durations per (user, session), then interpolated "
+    "p50/p90/p99 fixed-point quantized. The windows partition by "
+    "user_id, so state never exceeds one user's events per task; the "
+    "final percentile runs on session-cardinality data. At 100 TB "
+    "swap percentile() for approx_percentile, same shape.",
+)
+def session_duration_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts"))
+    gap = us - F.lag(us).over(w)
+    marker = F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0)
+    run = W.partitionBy("user_id").orderBy("us", "event_id").rowsBetween(
+        W.unboundedPreceding, W.currentRow
+    )
+    s = (
+        t(spark, sf_dir, "events")
+        .select("user_id", "event_id", "ts")
+        .withColumn("us", us)
+        .withColumn("marker", marker)
+        .withColumn("session_id", F.sum("marker").over(run))
+    )
+    dur = s.groupBy("user_id", "session_id").agg(
+        (F.max("us") - F.min("us")).alias("dur_us")
+    )
+    return dur.agg(
+        F.count("*").alias("n_sessions"),
+        fpq(F.percentile("dur_us", F.lit(0.5)) / 1e6).alias("p50_s"),
+        fpq(F.percentile("dur_us", F.lit(0.9)) / 1e6).alias("p90_s"),
+        fpq(F.percentile("dur_us", F.lit(0.99)) / 1e6).alias("p99_s"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# PMI between event types co-occurring in user-day baskets
+# ---------------------------------------------------------------------------
+
+_PMI_ORACLE = """
+WITH basket AS (
+    SELECT DISTINCT user_id, CAST(ts AS DATE) AS day, event_type
+    FROM events
+),
+nb AS (SELECT COUNT(DISTINCT (user_id, day)) AS n_baskets FROM basket),
+single AS (
+    SELECT event_type, COUNT(*) AS k FROM basket GROUP BY event_type
+),
+pair AS (
+    SELECT a.event_type AS type_a, b.event_type AS type_b, COUNT(*) AS kab
+    FROM basket a JOIN basket b
+      ON a.user_id = b.user_id AND a.day = b.day
+     AND a.event_type < b.event_type
+    GROUP BY a.event_type, b.event_type
+)
+SELECT type_a, type_b, kab,
+       CAST(floor(
+           ln(CAST(kab AS DOUBLE) * n_baskets / (CAST(sa.k AS DOUBLE) * sb.k))
+           * 1e9 + 0.5) / 1e9 AS DOUBLE) AS pmi
+FROM pair
+JOIN single sa ON sa.event_type = type_a
+JOIN single sb ON sb.event_type = type_b
+CROSS JOIN nb
+"""
+
+
+@register(
+    "event_cooccurrence_pmi",
+    _PMI_ORACLE,
+    doc="Pointwise mutual information between event types sharing a "
+    "user-day basket — which behaviors genuinely attract vs merely "
+    "both being common (the lift-style complement to "
+    "event_transition_matrix's ordered transitions). Baskets are "
+    "distinct'd first, the pair join runs within (user, day) keys "
+    "(fan-out bounded by the event-type alphabet, never events²), "
+    "marginals and basket count are exact integers, and the single "
+    "PMI log per |types|² output row is fixed-point quantized. The "
+    "1-row basket count broadcasts.",
+)
+def event_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    basket = (
+        t(spark, sf_dir, "events")
+        .select("user_id", F.to_date("ts").alias("day"), "event_type")
+        .distinct()
+    )
+    nb = basket.select("user_id", "day").distinct().agg(
+        F.count("*").alias("n_baskets")
+    )
+    single = basket.groupBy("event_type").agg(F.count("*").alias("k"))
+    a, b = basket.alias("a"), basket.alias("b")
+    pair = (
+        a.join(
+            b,
+            (F.col("a.user_id") == F.col("b.user_id"))
+            & (F.col("a.day") == F.col("b.day"))
+            & (F.col("a.event_type") < F.col("b.event_type")),
+        )
+        .groupBy(
+            F.col("a.event_type").alias("type_a"),
+            F.col("b.event_type").alias("type_b"),
+        )
+        .agg(F.count("*").alias("kab"))
+    )
+    sa, sb = single.alias("sa"), single.alias("sb")
+    pmi = F.log(
+        F.col("kab").cast("double")
+        * F.col("n_baskets")
+        / (F.col("sa.k").cast("double") * F.col("sb.k"))
+    )
+    return (
+        pair.join(F.broadcast(sa), F.col("type_a") == F.col("sa.event_type"))
+        .join(F.broadcast(sb), F.col("type_b") == F.col("sb.event_type"))
+        .crossJoin(F.broadcast(nb))
+        .select(
+            "type_a",
+            "type_b",
+            "kab",
+            (F.floor(pmi * 1e9 + F.lit(0.5)) / 1e9)
+            .cast("double")
+            .alias("pmi"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Error-rate spike detection vs a trailing window baseline
+# ---------------------------------------------------------------------------
+
+_SPIKE_ORACLE = """
+WITH daily AS (
+    SELECT CAST(ts AS DATE) AS day,
+           COUNT(*) AS n_events,
+           CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_errors
+    FROM events GROUP BY CAST(ts AS DATE)
+),
+w AS (
+    SELECT day, n_events, n_errors,
+           CAST(SUM(n_errors) OVER (
+               ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING
+           ) AS BIGINT) AS base_errors,
+           CAST(SUM(n_events) OVER (
+               ORDER BY day ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING
+           ) AS BIGINT) AS base_events
+    FROM daily
+)
+SELECT day, n_events, n_errors, base_errors, base_events
+FROM w
+WHERE base_events IS NOT NULL AND base_events > 0
+  AND n_errors >= 5
+  AND CAST(n_errors AS BIGINT) * base_events
+      > 2 * CAST(base_errors AS BIGINT) * n_events
+"""
+
+
+@register(
+    "event_error_spike",
+    _SPIKE_ORACLE,
+    doc="Error-burst detection: days whose error RATE more than doubles "
+    "the trailing 7-day baseline (with a minimum-count floor so quiet "
+    "days can't alert on noise) — the ops monitor every event "
+    "warehouse feeds. The spike predicate is cross-multiplied "
+    "(n_err·base_ev > 2·base_err·n_ev) so the comparison is exact "
+    "integer arithmetic with NO division anywhere; the trailing "
+    "window carries two integer sums over day-cardinality data.",
+)
+def event_error_spike(spark: SparkSession, sf_dir: str) -> DataFrame:
+    daily = (
+        t(spark, sf_dir, "events")
+        .groupBy(F.to_date("ts").alias("day"))
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(
+                F.when(F.col("event_type") == "error", 1).otherwise(0)
+            ).alias("n_errors"),
+        )
+    )
+    w = W.orderBy("day").rowsBetween(-7, -1)
+    wd = daily.withColumn("base_errors", F.sum("n_errors").over(w)).withColumn(
+        "base_events", F.sum("n_events").over(w)
+    )
+    return wd.filter(
+        F.col("base_events").isNotNull()
+        & (F.col("base_events") > 0)
+        & (F.col("n_errors") >= 5)
+        & (
+            F.col("n_errors").cast("bigint") * F.col("base_events")
+            > 2 * F.col("base_errors").cast("bigint") * F.col("n_events")
+        )
+    ).select("day", "n_events", "n_errors", "base_errors", "base_events")
+
+
+# ---------------------------------------------------------------------------
+# event_window_funnel — time-window-constrained funnel depth
+# ---------------------------------------------------------------------------
+
+_WF_WINDOW = "1 HOUR"
+
+
+_WF_ORACLE = f"""
+WITH v AS (
+    SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'
+),
+c AS (
+    SELECT v.user_id, v.event_id, v.ts,
+           MIN(e.ts) AS click_ts
+    FROM v LEFT JOIN events e
+      ON e.user_id = v.user_id AND e.event_type = 'click'
+     AND e.ts > v.ts AND e.ts <= v.ts + INTERVAL {_WF_WINDOW}
+    GROUP BY v.user_id, v.event_id, v.ts
+),
+p AS (
+    SELECT c.user_id, c.event_id, c.click_ts,
+           MIN(e.ts) AS buy_ts
+    FROM c LEFT JOIN events e
+      ON e.user_id = c.user_id AND e.event_type = 'purchase'
+     AND c.click_ts IS NOT NULL
+     AND e.ts > c.click_ts AND e.ts <= c.click_ts + INTERVAL {_WF_WINDOW}
+    GROUP BY c.user_id, c.event_id, c.click_ts
+),
+depth AS (
+    SELECT user_id,
+           MAX(CASE WHEN buy_ts IS NOT NULL THEN 3
+                    WHEN click_ts IS NOT NULL THEN 2
+                    ELSE 1 END) AS depth
+    FROM p GROUP BY user_id
+)
+SELECT CAST(depth AS INT) AS depth,
+       CAST(COUNT(*) AS BIGINT) AS n_users
+FROM depth GROUP BY depth
+"""
+
+
+@register(
+    "event_window_funnel",
+    _WF_ORACLE,
+    doc="Time-window-constrained funnel depth (the ClickHouse "
+    "windowFunnel analog): view -> click within 1h -> purchase within "
+    "1h of the click, reported as a per-user max-depth histogram. "
+    "Unlike funnel_conversion's unbounded 'first event after' chain, "
+    "every hop here must land inside the sliding window, which is "
+    "what product funnels actually measure (a purchase a week later "
+    "is not this funnel). Each hop is an equi-join on user_id with a "
+    "range predicate + a MIN aggregate — fan-out is bounded by "
+    "events-per-user-per-hour, and everything shuffles on the same "
+    "user_id key so the two hops and the depth rollup share one "
+    "partitioning. MIN over timestamps is exact (µs integers) — no "
+    "float anywhere.",
+)
+def event_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = t(spark, sf_dir, "events").select("user_id", "event_id", "event_type", "ts")
+    v = ev.filter(F.col("event_type") == "view").select(
+        "user_id", "event_id", "ts"
+    )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
+    )
+    buys = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
+    )
+    c = (
+        v.join(
+            clicks,
+            (F.col("c_user") == F.col("user_id"))
+            & (F.col("c_ts") > F.col("ts"))
+            & (F.col("c_ts") <= F.expr(f"ts + INTERVAL {_WF_WINDOW}")),
+            "left",
+        )
+        .groupBy("user_id", "event_id", "ts")
+        .agg(F.min("c_ts").alias("click_ts"))
+    )
+    p = (
+        c.join(
+            buys,
+            (F.col("p_user") == F.col("user_id"))
+            & F.col("click_ts").isNotNull()
+            & (F.col("p_ts") > F.col("click_ts"))
+            & (
+                F.col("p_ts")
+                <= F.expr(f"click_ts + INTERVAL {_WF_WINDOW}")
+            ),
+            "left",
+        )
+        .groupBy("user_id", "event_id", "click_ts")
+        .agg(F.min("p_ts").alias("buy_ts"))
+    )
+    depth = p.groupBy("user_id").agg(
+        F.max(
+            F.when(F.col("buy_ts").isNotNull(), 3)
+            .when(F.col("click_ts").isNotNull(), 2)
+            .otherwise(1)
+        ).alias("depth")
+    )
+    return depth.groupBy(F.col("depth").cast("int").alias("depth")).agg(
+        F.count("*").cast("bigint").alias("n_users")
+    )
+
+
+# ---------------------------------------------------------------------------
+# event_inter_arrival_cv — burstiness profile of the event stream
+# ---------------------------------------------------------------------------
+
+_IACV_ORACLE = f"""
+WITH g AS (
+    SELECT event_type,
+           CAST(epoch_us(ts) - epoch_us(lag(ts) OVER (
+               PARTITION BY event_type ORDER BY ts, event_id
+           )) AS BIGINT) AS gap_us
+    FROM events
+),
+s AS (
+    SELECT event_type,
+           CAST(COUNT(gap_us) AS BIGINT) AS n_gaps,
+           {dsum_sql('gap_us', 0)} AS s1,
+           {dsum_sql('CAST(gap_us AS DOUBLE) * CAST(gap_us AS DOUBLE)', 0)}
+               AS s2
+    FROM g GROUP BY event_type
+)
+SELECT event_type, n_gaps,
+       {fpq_sql('s1 / CAST(n_gaps AS DOUBLE) / 1e6', 6)} AS mean_gap_s,
+       {fpq_sql(
+           "sqrt(greatest(s2 / CAST(n_gaps AS DOUBLE)"
+           " - (s1 / CAST(n_gaps AS DOUBLE))"
+           " * (s1 / CAST(n_gaps AS DOUBLE)), 0.0))"
+           " / (s1 / CAST(n_gaps AS DOUBLE))", 6
+       )} AS cv
+FROM s
+"""
+
+
+@register(
+    "event_inter_arrival_cv",
+    _IACV_ORACLE,
+    doc="Burstiness profile: coefficient of variation of inter-arrival "
+    "times per event type (cv ~ 1 is Poisson-like, cv >> 1 is bursty, "
+    "cv << 1 is metronomic) — the traffic-shape diagnostic that "
+    "decides whether event_error_spike-style anomaly thresholds can "
+    "assume Poisson noise. Gaps are exact integer microseconds from "
+    "the lag over the full (ts, event_id) tie-break; moments are "
+    "decimal-exact sums (gap^2 at µs scale needs the wide decimal — "
+    "(1e10 us)^2 overflows int64); the epsilon-negative variance "
+    "guard mirrors win_bollinger. One window pass + one hash "
+    "aggregate, both keyed on event_type.",
+)
+def event_inter_arrival_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    w = W.partitionBy("event_type").orderBy("ts", "event_id")
+    g = t(spark, sf_dir, "events").select(
+        "event_type",
+        (
+            F.unix_micros(F.col("ts"))
+            - F.unix_micros(F.lag("ts").over(w))
+        )
+        .cast("bigint")
+        .alias("gap_us"),
+    )
+    s = g.groupBy("event_type").agg(
+        F.count("gap_us").cast("bigint").alias("n_gaps"),
+        dsum("gap_us", 0).alias("s1"),
+        dsum(
+            F.col("gap_us").cast("double") * F.col("gap_us").cast("double"),
+            0,
+        ).alias("s2"),
+    )
+    n_d = F.col("n_gaps").cast("double")
+    mean = F.col("s1") / n_d
+    var = F.greatest(
+        F.col("s2") / n_d - mean * mean, F.lit(0.0)
+    )
+    return s.select(
+        "event_type",
+        "n_gaps",
+        fpq(mean / F.lit(1e6), 6).alias("mean_gap_s"),
+        fpq(F.sqrt(var) / mean, 6).alias("cv"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# event_entropy_rate — conditional next-event entropy per from-state
+# ---------------------------------------------------------------------------
+
+_ER_FP = 1_000_000_000_000
+
+
+def _entropy_rate_oracle() -> str:
+    return f"""
+WITH seq AS (
+    SELECT user_id, event_type AS cur,
+           lead(event_type) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+           ) AS nxt
+    FROM events
+),
+trans AS (
+    SELECT cur, nxt, CAST(COUNT(*) AS BIGINT) AS k
+    FROM seq WHERE nxt IS NOT NULL GROUP BY cur, nxt
+),
+tot AS (SELECT cur, CAST(SUM(k) AS BIGINT) AS n FROM trans GROUP BY cur),
+terms AS (
+    SELECT t.cur,
+           CAST(floor(-(CAST(t.k AS DOUBLE) / o.n)
+                      * log2(CAST(t.k AS DOUBLE) / o.n)
+                      * {_ER_FP}) AS BIGINT) AS term_fp
+    FROM trans t JOIN tot o ON o.cur = t.cur
+)
+SELECT s.cur AS from_type, o.n AS n_transitions,
+       CAST(CAST(SUM(s.term_fp) AS DOUBLE) / {_ER_FP} AS DOUBLE)
+           AS entropy_bits
+FROM terms s JOIN tot o ON o.cur = s.cur
+GROUP BY s.cur, o.n
+"""
+
+
+@register(
+    "event_entropy_rate",
+    _entropy_rate_oracle(),
+    doc="Conditional next-event entropy per from-state — how "
+    "predictable is what a user does NEXT given what they just did "
+    "(the entropy-rate view of event_transition_matrix: ~log2(5) "
+    "bits means the process is memoryless noise, near 0 means "
+    "deterministic flows worth productizing). Each -p*log2(p) term "
+    "is fixed-point quantized BEFORE the sum — the agg_entropy rule "
+    "— so the float log's ulps can't make the aggregation "
+    "order-dependent; transitions come from one lead() window over "
+    "the full (ts, event_id) tie-break. Output is per from-state "
+    "with its transition count; O(types^2) intermediate only.",
+)
+def event_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = t(spark, sf_dir, "events").select(
+        F.col("event_type").alias("cur"),
+        F.lead("event_type").over(w).alias("nxt"),
+    )
+    trans = (
+        seq.filter(F.col("nxt").isNotNull())
+        .groupBy("cur", "nxt")
+        .agg(F.count("*").cast("bigint").alias("k"))
+    )
+    tot = trans.groupBy("cur").agg(F.sum("k").cast("bigint").alias("n"))
+    p = F.col("k").cast("double") / F.col("n").cast("double")
+    terms = trans.join(F.broadcast(tot), "cur").select(
+        "cur",
+        F.floor(-p * F.log2(p) * F.lit(float(_ER_FP)))
+        .cast("bigint")
+        .alias("term_fp"),
+    )
+    return (
+        terms.groupBy("cur")
+        .agg(F.sum("term_fp").alias("sum_fp"))
+        .join(F.broadcast(tot), "cur")
+        .select(
+            F.col("cur").alias("from_type"),
+            F.col("n").alias("n_transitions"),
+            (F.col("sum_fp").cast("double") / F.lit(float(_ER_FP)))
+            .cast("double")
+            .alias("entropy_bits"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# event_markov_stationary — stationary distribution of the type chain
+# ---------------------------------------------------------------------------
+
+_MKV_T = 12  # pinned power iterations
+
+
+_MKV_FP = 10**12  # probability fixed-point scale
+
+
+def _markov_oracle() -> str:
+    steps = []
+    prev = "p0"
+    for i in range(1, _MKV_T + 1):
+        steps.append(
+            f"""p{i} AS MATERIALIZED (
+    SELECT e.dst AS state,
+           CAST(SUM((CAST(p.p AS HUGEINT) * e.n) // e.rn) AS BIGINT)
+               AS p
+    FROM {prev} p JOIN e ON e.src = p.state
+    GROUP BY e.dst
+)"""
+        )
+        prev = f"p{i}"
+    chain = ",\n".join(steps)
+    return f"""
+WITH tr AS MATERIALIZED (
+    SELECT event_type AS src,
+           lead(event_type) OVER (
+               PARTITION BY user_id ORDER BY ts, event_id
+           ) AS dst
+    FROM events
+),
+e0 AS (
+    SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS n
+    FROM tr WHERE dst IS NOT NULL GROUP BY src, dst
+),
+e AS MATERIALIZED (
+    SELECT src, dst, n,
+           CAST(SUM(n) OVER (PARTITION BY src) AS BIGINT) AS rn
+    FROM e0
+),
+k0 AS (SELECT CAST(COUNT(DISTINCT src) AS BIGINT) AS nk FROM e),
+p0 AS (
+    SELECT src AS state, CAST({_MKV_FP} // nk AS BIGINT) AS p
+    FROM (SELECT DISTINCT src FROM e), k0
+),
+{chain}
+SELECT state AS event_type, p AS stationary_fp
+FROM {prev}
+"""
+
+
+@register(
+    "event_markov_stationary",
+    _markov_oracle(),
+    doc="Stationary distribution of the user-journey Markov chain: "
+    "consecutive event types per user (lead over ts, event_id) form "
+    "the transition counts; 12 pinned power-iteration steps propagate "
+    "a uniform start through P — where user sessions spend their "
+    "long-run time, the navigation-equilibrium diagnostic (PageRank's "
+    "cousin on the behavioral graph; same discipline as "
+    "graph_pagerank/corpus_doremi_weights: pinned iterations, exact "
+    "integer fixed-point, per-edge floor division identical on both "
+    "engines — mass leaks identically, so the result is "
+    "bit-reproducible). Scale: transitions are one window pass over "
+    "user-partitioned events; the iteration joins a K-row rank vector "
+    "(K = event types) against a K^2-row edge list, eagerly "
+    "localCheckpointed per step — constant lineage, dimension-sized "
+    "state no matter the corpus.",
+)
+def event_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    ev = t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    tr = ev.select(
+        F.col("event_type").alias("src"),
+        F.lead("event_type").over(w).alias("dst"),
+    ).filter(F.col("dst").isNotNull())
+    e0 = tr.groupBy("src", "dst").agg(
+        F.count("*").cast("bigint").alias("n")
+    )
+    e = (
+        e0.withColumn(
+            "rn", F.sum("n").over(W.partitionBy("src")).cast("bigint")
+        )
+        .coalesce(1)
+        .localCheckpoint(eager=True)
+    )
+    k0 = e.select("src").distinct().agg(
+        F.count("*").cast("bigint").alias("nk")
+    )
+    p = (
+        e.select("src").distinct()
+        .crossJoin(F.broadcast(k0))
+        .select(
+            F.col("src").alias("state"),
+            F.expr(f"CAST({_MKV_FP} DIV nk AS BIGINT)").alias("p"),
+        )
+        .coalesce(1)
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(_MKV_T):
+        p = (
+            p.join(e, p.state == e.src)
+            .groupBy(F.col("dst").alias("state"))
+            .agg(
+                F.sum(
+                    F.expr(
+                        "CAST(CAST(p AS DECIMAL(38,0)) * n DIV rn"
+                        " AS BIGINT)"
+                    )
+                )
+                .cast("bigint")
+                .alias("p")
+            )
+            .coalesce(1)
+            .localCheckpoint(eager=True)
+        )
+    return p.select(
+        F.col("state").alias("event_type"),
+        F.col("p").alias("stationary_fp"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# event_attribution_ushape — U-shaped multi-touch conversion attribution
+# ---------------------------------------------------------------------------
+
+_ATTR_FP = 1_000_000  # one conversion distributes exactly ~1e6 credit
+
+
+def _attr_oracle() -> str:
+    return f"""
+WITH j AS (
+    SELECT user_id, event_type, ts, event_id,
+           SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+               OVER (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+               AS conv_id
+    FROM events
+),
+touches AS (
+    SELECT user_id, conv_id, event_type,
+           ROW_NUMBER() OVER (PARTITION BY user_id, conv_id
+                              ORDER BY ts, event_id) AS rn,
+           COUNT(*) OVER (PARTITION BY user_id, conv_id) AS n
+    FROM j
+    WHERE conv_id >= 1 AND event_type <> 'purchase'
+),
+credited AS (
+    SELECT event_type,
+           CASE WHEN n = 1 THEN {_ATTR_FP}
+                WHEN n = 2 THEN {_ATTR_FP // 2}
+                WHEN rn = 1 OR rn = n THEN {2 * _ATTR_FP // 5}
+                ELSE {_ATTR_FP // 5} // (n - 2)
+           END AS credit
+    FROM touches
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_touches,
+       CAST(SUM(credit) AS BIGINT) AS credit_fp
+FROM credited GROUP BY event_type
+"""
+
+
+@register(
+    "event_attribution_ushape",
+    _attr_oracle(),
+    doc="U-shaped (position-based) multi-touch attribution: every "
+    "purchase closes a journey of the user's preceding non-purchase "
+    "touches (journey id = count of purchases at-or-after each event, "
+    "so each touch belongs to exactly one conversion); credit splits "
+    "40/20/40 — first and last touch 400k fixed-point each, middles "
+    "share 200k by integer floor division (1-touch journeys take the "
+    "full 1e6, 2-touch journeys 500k each). The marketing-analytics "
+    "standard between last-touch (all credit to the final click) and "
+    "Markov removal effects (event_markov_stationary's territory). "
+    "All-integer credit, full (ts, event_id) tie-breaks — bit-exact "
+    "on both engines; floor remainders leak identically. Scale: two "
+    "window passes over user-partitioned events + one hash aggregate "
+    "— the win_session_gap shape, one user-keyed shuffle.",
+)
+def event_attribution_ushape(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    ev = t(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+    w_after = (
+        W.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(W.currentRow, W.unboundedFollowing)
+    )
+    j = ev.withColumn(
+        "conv_id",
+        F.sum(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        ).over(w_after),
+    )
+    wt = W.partitionBy("user_id", "conv_id").orderBy("ts", "event_id")
+    touches = (
+        j.filter(
+            (F.col("conv_id") >= 1)
+            & (F.col("event_type") != "purchase")
+        )
+        .withColumn("rn", F.row_number().over(wt))
+        .withColumn(
+            "n", F.count("*").over(W.partitionBy("user_id", "conv_id"))
+        )
+    )
+    credit = (
+        F.when(F.col("n") == 1, F.lit(_ATTR_FP))
+        .when(F.col("n") == 2, F.lit(_ATTR_FP // 2))
+        .when(
+            (F.col("rn") == 1) | (F.col("rn") == F.col("n")),
+            F.lit(2 * _ATTR_FP // 5),
+        )
+        .otherwise(
+            F.expr(f"{_ATTR_FP // 5} DIV (n - 2)")
+        )
+    )
+    return (
+        touches.select("event_type", credit.alias("credit"))
+        .groupBy("event_type")
+        .agg(
+            F.count("*").cast("bigint").alias("n_touches"),
+            F.sum("credit").cast("bigint").alias("credit_fp"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# event_attribution_timedecay — exponential half-life attribution
+# ---------------------------------------------------------------------------
+
+_DECAY_HALF_LIFE_H = 168  # one-week half-life, the industry default
+
+
+_DECAY_MAX_SHIFT = 30  # cap: beyond 30 half-lives the weight is 0-ish
+
+
+def _attr_decay_oracle() -> str:
+    return f"""
+WITH j AS (
+    SELECT user_id, event_type, ts, event_id,
+           SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+               OVER (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+               AS conv_id
+    FROM events
+),
+conv_ts AS (
+    SELECT user_id, conv_id, ts AS cts FROM j
+    WHERE event_type = 'purchase'
+),
+touches AS (
+    SELECT t.user_id, t.conv_id, t.event_type,
+           ({_ATTR_FP} >> CAST(LEAST(
+               (epoch_us(c.cts) - epoch_us(t.ts))
+                   // (3600000000 * {_DECAY_HALF_LIFE_H}),
+               {_DECAY_MAX_SHIFT}) AS INT)) AS w
+    FROM j t JOIN conv_ts c
+      ON c.user_id = t.user_id AND c.conv_id = t.conv_id
+    WHERE t.conv_id >= 1 AND t.event_type <> 'purchase'
+),
+norm AS (
+    SELECT user_id, conv_id, CAST(SUM(w) AS BIGINT) AS tw
+    FROM touches GROUP BY user_id, conv_id
+),
+credited AS (
+    SELECT t.event_type,
+           CAST((CAST(t.w AS HUGEINT) * {_ATTR_FP}) // n.tw AS BIGINT)
+               AS credit
+    FROM touches t
+    JOIN norm n ON n.user_id = t.user_id AND n.conv_id = t.conv_id
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_touches,
+       CAST(SUM(credit) AS BIGINT) AS credit_fp
+FROM credited GROUP BY event_type
+"""
+
+
+@register(
+    "event_attribution_timedecay",
+    _attr_decay_oracle(),
+    doc="Time-decay multi-touch attribution (one-week half-life): each "
+    "touch in a conversion journey weighs 2^-floor(age/half_life) — "
+    "the weight is an exact DYADIC integer (fixed-point right-shift, "
+    "shift capped at 30), so unlike exp(-t/tau) there is no "
+    "transcendental in the weighting at all; per-journey credits "
+    "normalize to ~1e6 by exact integer floor division (HUGEINT/"
+    "DECIMAL widening). The recency-weighted complement to "
+    "event_attribution_ushape's positional split — same journey "
+    "construction (purchases-at-or-after journey id), same two-window "
+    "+ aggregate scale shape, one user-keyed shuffle.",
+)
+def event_attribution_timedecay(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+
+    ev = t(spark, sf_dir, "events").select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+    w_after = (
+        W.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(W.currentRow, W.unboundedFollowing)
+    )
+    j = ev.withColumn(
+        "conv_id",
+        F.sum(
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+        ).over(w_after),
+    )
+    conv_ts = j.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("cu"),
+        F.col("conv_id").alias("cc"),
+        F.col("ts").alias("cts"),
+    )
+    shift = F.expr(
+        f"CAST(LEAST((unix_micros(cts) - unix_micros(ts))"
+        f" DIV (3600000000 * {_DECAY_HALF_LIFE_H}),"
+        f" {_DECAY_MAX_SHIFT}) AS INT)"
+    )
+    touches = (
+        j.filter(
+            (F.col("conv_id") >= 1)
+            & (F.col("event_type") != "purchase")
+        )
+        .join(
+            conv_ts,
+            (F.col("user_id") == F.col("cu"))
+            & (F.col("conv_id") == F.col("cc")),
+        )
+        .select(
+            "user_id",
+            "conv_id",
+            "event_type",
+            shift.alias("_shift"),
+        )
+        .select(
+            "user_id",
+            "conv_id",
+            "event_type",
+            F.expr(
+                f"shiftright(CAST({_ATTR_FP} AS BIGINT), _shift)"
+            ).alias("w"),
+        )
+    )
+    norm = touches.groupBy("user_id", "conv_id").agg(
+        F.sum("w").cast("bigint").alias("tw")
+    )
+    credited = touches.join(norm, ["user_id", "conv_id"]).select(
+        "event_type",
+        F.expr(
+            f"CAST(CAST(w AS DECIMAL(38,0)) * {_ATTR_FP} DIV tw"
+            " AS BIGINT)"
+        ).alias("credit"),
+    )
+    return credited.groupBy("event_type").agg(
+        F.count("*").cast("bigint").alias("n_touches"),
+        F.sum("credit").cast("bigint").alias("credit_fp"),
+    )
+
+
+@register(
+    "view_session_durations",
+    session_oracle(),
+    doc="Connexion-session duration report — the observable output of "
+    "the reference's connection tracker "
+    "(analytics/etl/track_connexions.py:79-92 projects the auth log; "
+    "its v_connexions_actives view reports duree_connexion_min per "
+    "session), re-expressed as gap-and-island sessionization over the "
+    "events log: a 30-minute inactivity gap opens a new session "
+    "(lag + running-sum flags — the standard island id), then one "
+    "aggregate per (user, session) emits start/end/duration-minutes/"
+    "event-count. Duration is integer epoch-microsecond arithmetic "
+    "(floor minutes) — no float ever ranks. Plan: ONE shuffle on "
+    "user_id shared by the lag window, the island running sum, and "
+    "the final per-session aggregate; users sessionize independently "
+    "at any event volume (no global sort, no self-join).",
+)
+def view_session_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    ev = t(spark, sf_dir, "events").select(
+        "user_id", "event_id", "ts", F.unix_micros("ts").alias("us")
+    )
+    w_ord = W.partitionBy("user_id").orderBy("ts", "event_id")
+    prev = F.lag("us").over(w_ord)
+    new_sess = F.when(
+        prev.isNull() | ((F.col("us") - prev) > SESSION_GAP_US), 1
+    ).otherwise(0)
+    s = ev.withColumn(
+        "session_seq",
+        F.sum(new_sess).over(
+            w_ord.rowsBetween(W.unboundedPreceding, W.currentRow)
+        ),
+    )
+    return s.groupBy("user_id", "session_seq").agg(
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
+        F.expr("(max(us) - min(us)) DIV 60000000")
+        .cast("bigint")
+        .alias("duration_min"),
+        F.count("*").cast("bigint").alias("n_events"),
+    ).select(
+        "user_id",
+        F.col("session_seq").cast("bigint").alias("session_seq"),
+        "session_start",
+        "session_end",
+        "duration_min",
+        "n_events",
     )

@@ -4,7 +4,9 @@ Each query synthesizes a deterministic staged/current pair from the
 customer table (fixed literal effective timestamps), runs the engine
 operator, and is hash-checked against a DuckDB SQL restatement of the
 same merge semantics — making the SCD write-path algorithms themselves
-part of the correctness gate.
+part of the correctness gate. ``stream_scd2_ingest`` feeds the same
+SCD2 merge from a micro-batch stream; ``warehouse_time_travel`` reads
+versioned snapshots back.
 """
 
 from __future__ import annotations
@@ -418,4 +420,208 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_key="purchase_id",
         right_cols=["last_view_id", "last_view_ts"],
         tie_breaker="last_view_id",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Manifest time travel (versioned snapshot store round trip)
+# ---------------------------------------------------------------------------
+
+_TT_ORACLE = """
+SELECT 0 AS version, o_orderstatus, COUNT(*) AS n_orders
+FROM orders GROUP BY o_orderstatus
+UNION ALL
+SELECT 1 AS version, o_orderstatus, COUNT(*) AS n_orders
+FROM orders WHERE o_orderkey % 2 = 0 GROUP BY o_orderstatus
+"""
+
+
+@register(
+    "warehouse_time_travel",
+    _TT_ORACLE,
+    doc="Time travel on the manifest-pointer snapshot store "
+    "(warehouse/manifest.py): publish two versions of an orders "
+    "aggregate (v0 full, v1 evens-only), flip the _current marker "
+    "atomically each time, then read BOTH the historical v0 (via "
+    "read_version) and the live v1 (via read_current) back. The "
+    "oracle recomputes both snapshots from the base table, so any "
+    "marker/versioning/publish bug — wrong version served, torn "
+    "flip, history clobbered — breaks the hash. The store root is "
+    "rebuilt from scratch per run, so version numbering is "
+    "deterministic.",
+)
+def warehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+    import shutil
+
+    from evolution_data_warehouse_spark.queries.common import scratch
+    from evolution_data_warehouse_spark.warehouse.manifest import (
+        list_versions,
+        publish_versioned,
+        read_current,
+        read_version,
+    )
+
+    root = scratch("time_travel", sf_dir)
+    if os.path.exists(root):
+        shutil.rmtree(root)
+    base = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    v0 = publish_versioned(spark, {"orders": base}, root)
+    v1 = publish_versioned(
+        spark, {"orders": base.filter(F.col("o_orderkey") % 2 == 0)}, root
+    )
+    assert (v0, v1) == (0, 1) and list_versions(spark, root) == [0, 1]
+    hist = (
+        read_version(spark, root, "orders", 0)
+        .groupBy("o_orderstatus")
+        .agg(F.count("*").alias("n_orders"))
+        .select(F.lit(0).alias("version"), "o_orderstatus", "n_orders")
+    )
+    live = (
+        read_current(spark, root, "orders")
+        .groupBy("o_orderstatus")
+        .agg(F.count("*").alias("n_orders"))
+        .select(F.lit(1).alias("version"), "o_orderstatus", "n_orders")
+    )
+    return hist.unionByName(live)
+
+
+# ---------------------------------------------------------------------------
+# stream_scd2_ingest — streaming SCD2 dimension maintenance
+# ---------------------------------------------------------------------------
+
+_SCD2S_T1 = "2024-01-01 00:00:00"
+
+
+_SCD2S_T2 = "2024-06-01 00:00:00"
+
+
+def _scd2s_oracle() -> str:
+
+    return f"""
+-- unchanged active rows (never touched by either batch)
+SELECT c_custkey AS customer_key, c_mktsegment AS segment,
+       CAST(1 AS INT) AS version, TRUE AS est_actif,
+       TIMESTAMP '{_T0}' AS date_debut_validite,
+       CAST(NULL AS TIMESTAMP) AS date_fin_validite
+FROM customer WHERE c_acctbal >= 0
+UNION ALL
+-- closed previous versions of keys batch 1 reclassified
+SELECT c_custkey, c_mktsegment, CAST(1 AS INT), FALSE,
+       TIMESTAMP '{_T0}', TIMESTAMP '{_SCD2S_T1}'
+FROM customer WHERE c_acctbal < 0
+UNION ALL
+-- batch 1's new active versions
+SELECT c_custkey, 'DELINQUENT', CAST(2 AS INT), TRUE,
+       TIMESTAMP '{_SCD2S_T1}', CAST(NULL AS TIMESTAMP)
+FROM customer WHERE c_acctbal < 0
+UNION ALL
+-- batch 2's brand-new business keys, effective at the LATER ts
+SELECT c_custkey + 1000000, 'NEWSEG', CAST(1 AS INT), TRUE,
+       TIMESTAMP '{_SCD2S_T2}', CAST(NULL AS TIMESTAMP)
+FROM customer WHERE c_custkey % 50 = 0
+"""
+
+
+@register(
+    "stream_scd2_ingest",
+    _scd2s_oracle(),
+    doc="Streaming SCD2 dimension maintenance (warehouse/scd_store.py::"
+    "scd2_foreach_batch over the versioned store): two change batches "
+    "drain IN ORDER through one availableNow file stream + checkpoint "
+    "— batch 1 reclassifies delinquent customers (effective T1, "
+    "closing v1 rows and inserting v2), batch 2 lands brand-new keys "
+    "(effective T2, v1 inserts; existing keys pass through "
+    "untouched) — and the drained store must equal the composed SCD2 "
+    "history exactly (versions, activity flags, validity intervals). "
+    "An idempotence drain between the two batches must process 0 rows "
+    "and leave the store identical (asserted in-query). This gives "
+    "the streaming MERGE path (SURVEY §2.9) the same oracle-checked "
+    "evidence as the batch twin proc_scd2; restart/version-GC "
+    "behavior is covered by tests/test_scd_store_api.py. Scale: each "
+    "merge is scd2_apply's single full-outer shuffle on the business "
+    "key; the store is version-directory parquet (atomic publish).",
+)
+def stream_scd2_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    from evolution_data_warehouse_spark.warehouse.scd_store import (
+        read_dimension,
+        scd2_foreach_batch,
+        upsert_scd2,
+    )
+
+    root = tempfile.mkdtemp(prefix="stream_scd2_")
+    table_dir = f"{root}/dim_customer"
+    src = f"{root}/src"
+    ckpt = f"{root}/ckpt"
+    c = t(spark, sf_dir, "customer")
+
+    # seed the store with the current dimension (version-1 snapshot)
+    current = _current_dim(spark, sf_dir)
+    from evolution_data_warehouse_spark.warehouse.scd_store import (
+        _publish,
+    )
+
+    _publish(current, table_dir)
+
+    batch1 = c.select(
+        F.col("c_custkey").alias("customer_key"),
+        F.when(F.col("c_acctbal") < 0, F.lit("DELINQUENT"))
+        .otherwise(F.col("c_mktsegment"))
+        .alias("segment"),
+        F.lit(_SCD2S_T1).cast("timestamp").alias("_effective_ts"),
+    )
+    batch2 = c.filter(F.col("c_custkey") % 50 == 0).select(
+        (F.col("c_custkey") + 1000000).alias("customer_key"),
+        F.lit("NEWSEG").alias("segment"),
+        F.lit(_SCD2S_T2).cast("timestamp").alias("_effective_ts"),
+    )
+
+    schema = (
+        "customer_key long, segment string, _effective_ts timestamp"
+    )
+    apply_batch = scd2_foreach_batch(
+        table_dir, "customer_key", ["segment"]
+    )
+    drained: list[int] = []
+
+    def process(batch_df, batch_id):
+        n = batch_df.count()
+        if n:
+            drained.append(n)
+            apply_batch(batch_df, batch_id)
+
+    def drain() -> int:
+        q = (
+            spark.readStream.schema(schema)
+            .parquet(src)
+            .writeStream.foreachBatch(process)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        n = sum(drained)
+        drained.clear()
+        return n
+
+    batch1.coalesce(1).write.mode("append").parquet(src)
+    n1 = drain()
+    n_idem = drain()  # nothing new: must merge nothing
+    batch2.coalesce(1).write.mode("append").parquet(src)
+    n2 = drain()
+    if n1 < 1 or n_idem != 0 or n2 < 1:
+        raise AssertionError(
+            f"availableNow SCD2 idempotence violated: drains processed "
+            f"{n1}, {n_idem}, {n2} rows (expected >0, 0, >0)"
+        )
+    dim = read_dimension(spark, table_dir)
+    return dim.select(
+        "customer_key",
+        "segment",
+        F.col("version").cast("int").alias("version"),
+        "est_actif",
+        "date_debut_validite",
+        "date_fin_validite",
     )

@@ -1,15 +1,23 @@
-"""Acquisition-edge + procedural operators as registry queries:
-REST fetch, blob listing, the staging transform hook, ANALYZE stats."""
+"""Acquisition-edge, sink and procedural operators as registry queries:
+REST fetch, blob listing, file-format sources (CSV, JSON Lines, XML,
+ORC, WARC, sitemaps, Python data sources), partitioned and sharded
+sinks, the staging transform hook, ANALYZE stats, maintenance and
+orchestration procedures.
+"""
 
 from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from evolution_data_warehouse_spark.queries.common import register, t
-from evolution_data_warehouse_spark.queries.relational import _scratch
+from evolution_data_warehouse_spark.operators.dedup import (
+    content_hash64,
+    content_hash64_sql,
+)
+from evolution_data_warehouse_spark.queries.common import register, scratch, t
 from evolution_data_warehouse_spark.sources.external import (
     jdbc_available,
     list_blobs,
@@ -17,7 +25,10 @@ from evolution_data_warehouse_spark.sources.external import (
     rest_to_dataframe,
     write_jdbc,
 )
-from evolution_data_warehouse_spark.sources.staging import TableSpec, load_table
+from evolution_data_warehouse_spark.sources.staging import (
+    TableSpec,
+    load_table,
+)
 
 _TESTDATA_FILES = (
     "customer documents embeddings events lineitem nation orders part "
@@ -98,7 +109,7 @@ FROM region
     "(TableSpec.extra_transform).",
 )
 def udf_extra_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch("udf_extra_transform", sf_dir)
+    path = scratch("udf_extra_transform", sf_dir)
     t(spark, sf_dir, "region").coalesce(1).write.mode("overwrite").option(
         "header", True
     ).csv(path)
@@ -134,7 +145,7 @@ def proc_refresh_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a fresh session's in-memory catalog doesn't know about leftover
     # managed-table dirs and refuses the location otherwise).
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    path = _scratch("refresh_stats", sf_dir)
+    path = scratch("refresh_stats", sf_dir)
     t(spark, sf_dir, "region").write.mode("overwrite").option(
         "path", path
     ).saveAsTable(tbl)
@@ -171,7 +182,7 @@ def proc_log_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_log,
     )
 
-    log_dir = _scratch("log_etl_q", sf_dir)
+    log_dir = scratch("log_etl_q", sf_dir)
     shutil.rmtree(log_dir, ignore_errors=True)
     with logged_step(spark, log_dir, "staging", "stg_x") as info:
         info["lignes"] = 5
@@ -222,7 +233,7 @@ def view_open_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_error_log,
     )
 
-    err_dir = _scratch("err_log_q", sf_dir)
+    err_dir = scratch("err_log_q", sf_dir)
     shutil.rmtree(err_dir, ignore_errors=True)
     for row in _ERR_ROWS:
         log_error(spark, err_dir, *row[:5], est_resolu=row[5])
@@ -248,7 +259,7 @@ def proc_backup(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_table,
     )
 
-    root = _scratch("backup_q", sf_dir)
+    root = scratch("backup_q", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     df = t(spark, sf_dir, "region").select("r_regionkey", "r_name")
     for stamp in ("20240101", "20240201", "20240301"):
@@ -371,12 +382,12 @@ def snk_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"embedded Derby ({_DERBY_DRIVER}) missing from the Spark "
             "classpath"
         )
-    scratch = _scratch("jdbc_derby", sf_dir)
+    home = scratch("jdbc_derby", sf_dir)
     # Keep Derby's engine log out of the process CWD.
     spark._jvm.java.lang.System.setProperty(  # noqa: SLF001
-        "derby.system.home", scratch
+        "derby.system.home", home
     )
-    url = f"jdbc:derby:{os.path.join(scratch, 'db')};create=true"
+    url = f"jdbc:derby:{os.path.join(home, 'db')};create=true"
     src = t(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -406,7 +417,7 @@ SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier
     "properties as parquet.",
 )
 def src_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch("src_orc", sf_dir)
+    path = scratch("src_orc", sf_dir)
     t(spark, sf_dir, "supplier").write.mode("overwrite").orc(path)
     return spark.read.orc(path).select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
@@ -493,7 +504,7 @@ def proc_maintenance_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_small_files,
     )
 
-    path = _scratch("proc_maintenance_layout", sf_dir)
+    path = scratch("proc_maintenance_layout", sf_dir)
     orders = t(spark, sf_dir, "orders")
     n_rows = orders.count()
     orders.repartition(16).write.mode("overwrite").parquet(path)
@@ -510,3 +521,1279 @@ def proc_maintenance_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("rows_preserved", preserved if preserved == n_rows else -1),
     ]
     return spark.createDataFrame(rows, "metric string, value long")
+
+
+# ---------------------------------------------------------------------------
+# Error-tolerant CSV ingestion (PERMISSIVE + corrupt-record column)
+# ---------------------------------------------------------------------------
+
+_PERMISSIVE_ORACLE = """
+SELECT doc_id,
+       CASE WHEN doc_id % 13 = 0 THEN NULL ELSE n_chars END AS n_chars_parsed,
+       lang,
+       doc_id % 13 = 0 AS is_corrupt
+FROM documents
+"""
+
+
+@register(
+    "src_csv_permissive",
+    _PERMISSIVE_ORACLE,
+    doc="Error-tolerant CSV ingestion: a landing file with malformed "
+    "numeric cells (synthesized on one row in 13) read in PERMISSIVE "
+    "mode with columnNameOfCorruptRecord — bad cells null out and the "
+    "raw line is preserved for the quarantine path instead of killing "
+    "the load (FAILFAST's behavior, fatal at 100 TB) or silently "
+    "vanishing (DROPMALFORMED's). The oracle reconstructs the "
+    "expected null/corrupt pattern from the synthesis rule. Pairs "
+    "with quality.py route_quarantine downstream.",
+)
+def src_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    path = scratch("src_csv_permissive", sf_dir)
+    docs = t(spark, sf_dir, "documents")
+    lines = docs.select(
+        F.concat_ws(
+            ",",
+            F.col("doc_id").cast("string"),
+            F.when(F.col("doc_id") % 13 == 0, F.lit("NOT_A_NUMBER"))
+            .otherwise(F.col("n_chars").cast("string")),
+            F.col("lang"),
+        ).alias("value")
+    )
+    lines.write.mode("overwrite").text(path)
+    raw = (
+        spark.read.schema(
+            "doc_id long, n_chars_parsed long, lang string, _bad string"
+        )
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_bad")
+        .csv(path)
+    )
+    return raw.select(
+        "doc_id", "n_chars_parsed", "lang",
+        F.col("_bad").isNotNull().alias("is_corrupt"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# WARC web-archive ingestion (Common Crawl layout) — source-format evidence
+# ---------------------------------------------------------------------------
+
+_WARC_ORACLE = """
+SELECT doc_id,
+       CAST(2 AS INT) AS n_records,
+       'response' AS rec_type,
+       'http://corpus.local/doc/' || CAST(doc_id AS VARCHAR) AS uri,
+       CAST(octet_length(encode(COALESCE(text, ''))) AS BIGINT)
+           AS content_len,
+       TRUE AS payload_match
+FROM documents
+"""
+
+
+@register(
+    "src_warc_records",
+    _WARC_ORACLE,
+    doc="WARC (ISO 28500) web-archive ingestion — the source format of "
+    "web-scale LLM corpora (sources/warc.py): per document a 2-record "
+    "WARC (warcinfo + response) is written in the Common Crawl layout "
+    "(each record its OWN gzip member, concatenated) and parsed back — "
+    "version line, CRLF headers, Content-Length framing, trailing "
+    "CRLFCRLF, multistream gzip inflate. The member-per-record layout "
+    "is the scale property: any worker can start at a member boundary, "
+    "so a 100 TB crawl ingests parallel at record granularity with no "
+    "shuffle (one mapInPandas pass, like every codec here). "
+    "payload_match demands the response payload round-trip "
+    "byte-exactly; content_len is cross-checked against the oracle's "
+    "octet_length(encode(text)) — UTF-8 octets on both sides, "
+    "NULL-safe via COALESCE.",
+)
+def src_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    def mux_and_parse(batches):
+        from evolution_data_warehouse_spark.sources.warc import (
+            build_warc,
+            parse_warc,
+        )
+
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                d = int(doc_id)
+                payload = ("" if text is None else str(text)).encode(
+                    "utf-8"
+                )
+                uri = f"http://corpus.local/doc/{d}"
+                data = build_warc(
+                    [
+                        ("warcinfo", "", b"software: engine\r\n"),
+                        ("response", uri, payload),
+                    ],
+                    per_record_gzip=True,
+                )
+                recs = parse_warc(data)
+                resp = recs[-1]
+                rows.append(
+                    {
+                        "doc_id": d,
+                        "n_records": len(recs),
+                        "rec_type": resp["type"],
+                        "uri": resp["uri"],
+                        "content_len": resp["content_length"],
+                        "payload_match": resp["payload"] == payload,
+                    }
+                )
+            yield pd.DataFrame(rows)
+
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.mapInPandas(
+        mux_and_parse,
+        "doc_id long, n_records int, rec_type string, uri string, "
+        "content_len long, payload_match boolean",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sitemap URL discovery — the crawl frontier source
+# ---------------------------------------------------------------------------
+
+_SITEMAP_ORACLE = """
+SELECT doc_id,
+       CASE WHEN doc_id % 10 = 0 THEN 'index' ELSE 'urlset' END AS kind,
+       CAST(CASE WHEN doc_id % 10 = 0 THEN 2
+                 ELSE 1 + doc_id % 7 END AS BIGINT) AS n_entries,
+       CASE WHEN doc_id % 10 = 0
+            THEN 'http://h' || CAST(doc_id % 5 AS VARCHAR)
+                 || '.corpus.local/sitemap/' || CAST(doc_id AS VARCHAR)
+                 || '/0.xml'
+            ELSE 'http://h' || CAST(doc_id % 5 AS VARCHAR)
+                 || '.corpus.local/page/' || CAST(doc_id AS VARCHAR)
+                 || '/0' END AS first_loc,
+       CAST(CASE WHEN doc_id % 10 = 0 THEN 2
+                 ELSE (2 + doc_id % 7) // 2 END AS BIGINT)
+           AS n_with_lastmod,
+       TRUE AS roundtrip_ok
+FROM documents
+"""
+
+
+@register(
+    "src_sitemap_urls",
+    _SITEMAP_ORACLE,
+    doc="Sitemap (sitemaps.org) URL discovery (sources/sitemap.py) — "
+    "the third crawl-ingestion member beside WARC (archive format) "
+    "and robots.txt (compliance): per doc a real sitemap XML is built "
+    "and parsed back — every 10th doc a <sitemapindex> (the sharding "
+    "mechanism the protocol mandates above 50k URLs), the rest "
+    "<urlset> documents with per-URL lastmod on alternating entries. "
+    "roundtrip_ok demands every parsed loc/lastmod equal what was "
+    "built; entry counts, first loc, and lastmod coverage are "
+    "closed-form in doc_id. The protocol's 50,000-entry cap is the "
+    "parser's bomb guard, and malformed XML is ValueError-only — the "
+    "same per-row quarantine contract as WARC. One narrow mapInPandas "
+    "pass; sitemaps are independent rows, so discovery parallelizes "
+    "at host granularity with no shuffle.",
+)
+def src_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def mux_and_parse(batches):
+        from evolution_data_warehouse_spark.sources.sitemap import (
+            build_sitemap,
+            build_sitemap_index,
+            parse_sitemap,
+        )
+
+        for pdf in batches:
+            rows = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                host = f"http://h{d % 5}.corpus.local"
+                if d % 10 == 0:
+                    built = [
+                        {
+                            "loc": f"{host}/sitemap/{d}/{i}.xml",
+                            "lastmod": f"2026-0{1 + i}-01",
+                        }
+                        for i in range(2)
+                    ]
+                    data = build_sitemap_index(built)
+                else:
+                    n = 1 + d % 7
+                    built = [
+                        {
+                            "loc": f"{host}/page/{d}/{i}",
+                            "lastmod": (
+                                f"2026-0{1 + i % 9}-15"
+                                if i % 2 == 0
+                                else None
+                            ),
+                            "priority": "0.5" if i == 0 else None,
+                        }
+                        for i in range(n)
+                    ]
+                    data = build_sitemap(built)
+                parsed = parse_sitemap(data)
+                entries = parsed["entries"]
+                ok = len(entries) == len(built) and all(
+                    e["loc"] == b["loc"]
+                    and e.get("lastmod") == b.get("lastmod")
+                    for e, b in zip(entries, built)
+                )
+                rows.append(
+                    {
+                        "doc_id": d,
+                        "kind": parsed["kind"],
+                        "n_entries": len(entries),
+                        "first_loc": entries[0]["loc"],
+                        "n_with_lastmod": sum(
+                            1 for e in entries if e["lastmod"]
+                        ),
+                        "roundtrip_ok": bool(ok),
+                    }
+                )
+            yield pd.DataFrame(rows)
+
+    ids = t(spark, sf_dir, "documents").select("doc_id")
+    return ids.mapInPandas(
+        mux_and_parse,
+        "doc_id long, kind string, n_entries long, first_loc string, "
+        "n_with_lastmod long, roundtrip_ok boolean",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Z-order (Morton) layout — multi-dimensional clustering evidence
+# ---------------------------------------------------------------------------
+
+
+def _zorder_oracle() -> str:
+    from evolution_data_warehouse_spark.operators.layout import (
+        grid_sql,
+        zvalue_sql,
+    )
+
+    return f"""
+WITH b AS (
+    SELECT MIN(l_partkey) AS xmin, MAX(l_partkey) AS xmax,
+           MIN(l_suppkey) AS ymin, MAX(l_suppkey) AS ymax
+    FROM lineitem
+),
+g AS (
+    SELECT l.l_orderkey, l.l_linenumber, l.l_partkey,
+           {grid_sql("l.l_partkey", "b.xmin", "b.xmax")} AS xg,
+           {grid_sql("l.l_suppkey", "b.ymin", "b.ymax")} AS yg
+    FROM lineitem l, b
+),
+z AS (SELECT *, {zvalue_sql("xg", "yg")} AS zv FROM g),
+t AS (
+    SELECT xg, yg,
+           NTILE(16) OVER (ORDER BY zv, l_orderkey, l_linenumber) AS zb,
+           NTILE(16) OVER (ORDER BY l_partkey, l_orderkey, l_linenumber)
+               AS lb
+    FROM z
+),
+za AS (
+    SELECT zb AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(MAX(xg) - MIN(xg) AS BIGINT) AS x_span_z,
+           CAST(MAX(yg) - MIN(yg) AS BIGINT) AS y_span_z
+    FROM t GROUP BY zb
+),
+la AS (
+    SELECT lb AS bucket,
+           CAST(MAX(xg) - MIN(xg) AS BIGINT) AS x_span_lin,
+           CAST(MAX(yg) - MIN(yg) AS BIGINT) AS y_span_lin
+    FROM t GROUP BY lb
+)
+SELECT CAST(za.bucket AS INT) AS bucket, za.n_rows,
+       za.x_span_z, za.y_span_z, la.x_span_lin, la.y_span_lin
+FROM za JOIN la ON za.bucket = la.bucket
+"""
+
+
+@register(
+    "proc_zorder_report",
+    _zorder_oracle(),
+    doc="Z-order (Morton curve) multi-dimensional clustering "
+    "(operators/layout.py) — the OPTIMIZE ZORDER BY leg of layout "
+    "maintenance beside proc_maintenance_layout's compaction leg: "
+    "lineitem rows grid-normalize (exact BIGINT arithmetic over a "
+    "1-row min/max broadcast) and bit-interleave (l_partkey, "
+    "l_suppkey) into a 16-bit curve value; 16 equal buckets in curve "
+    "order report their per-dimension grid spans NEXT TO the same "
+    "buckets under a plain single-key sort. The output IS the pruning "
+    "evidence: z-buckets bound BOTH dimensions (y_span_z well below "
+    "the 255 grid span every single-key bucket shows), which is what "
+    "lets parquet min/max footer stats prune scans filtered on either "
+    "column at 100 TB. NTILE here makes bucket assignment "
+    "oracle-checkable; the physical write path (zorder_layout) uses "
+    "repartitionByRange — one range shuffle — and is asserted on real "
+    "files in test_warehouse.",
+)
+def proc_zorder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from evolution_data_warehouse_spark.operators.layout import (
+        grid_expr,
+        zvalue,
+    )
+
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
+    )
+    bounds = li.agg(
+        F.min("l_partkey").alias("xmin"), F.max("l_partkey").alias("xmax"),
+        F.min("l_suppkey").alias("ymin"), F.max("l_suppkey").alias("ymax"),
+    )
+    g = (
+        li.join(F.broadcast(bounds))
+        .withColumn("xg", F.expr(grid_expr("l_partkey", "xmin", "xmax")))
+        .withColumn("yg", F.expr(grid_expr("l_suppkey", "ymin", "ymax")))
+        .withColumn("zv", zvalue(F.col("xg"), F.col("yg")))
+    )
+    tiled = g.select(
+        "xg", "yg",
+        F.ntile(16)
+        .over(W.orderBy("zv", "l_orderkey", "l_linenumber"))
+        .alias("zb"),
+        F.ntile(16)
+        .over(W.orderBy("l_partkey", "l_orderkey", "l_linenumber"))
+        .alias("lb"),
+    )
+    za = tiled.groupBy("zb").agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        (F.max("xg") - F.min("xg")).cast("bigint").alias("x_span_z"),
+        (F.max("yg") - F.min("yg")).cast("bigint").alias("y_span_z"),
+    )
+    la = tiled.groupBy("lb").agg(
+        (F.max("xg") - F.min("xg")).cast("bigint").alias("x_span_lin"),
+        (F.max("yg") - F.min("yg")).cast("bigint").alias("y_span_lin"),
+    )
+    return za.join(la, za["zb"] == la["lb"]).select(
+        F.col("zb").cast("int").alias("bucket"),
+        "n_rows", "x_span_z", "y_span_z", "x_span_lin", "y_span_lin",
+    )
+
+
+# ---------------------------------------------------------------------------
+# WARC revisit records — the multi-snapshot crawl workflow
+# ---------------------------------------------------------------------------
+
+_REVISIT_PROFILE = (
+    "http://netpreserve.org/warc/1.0/revisit/identical-payload-digest"
+)
+
+
+_REVISIT_ORACLE = """
+SELECT doc_id,
+       CASE WHEN doc_id % 3 = 0 THEN 'response' ELSE 'revisit' END
+           AS rec2_type,
+       CAST(CASE WHEN doc_id % 3 = 0
+                 THEN octet_length(encode(COALESCE(text, ''))) + 3
+                 ELSE 0 END AS BIGINT) AS n_bytes_2,
+       TRUE AS digest_ok,
+       TRUE AS refers_ok
+FROM documents
+"""
+
+
+@register(
+    "src_warc_revisit",
+    _REVISIT_ORACLE,
+    doc="WARC revisit-record handling (sources/warc.py) — the "
+    "multi-snapshot Common Crawl shape: a recrawled URL whose payload "
+    "is unchanged is stored as a 'revisit' record (ISO 28500 / the "
+    "netpreserve identical-payload-digest profile) carrying only the "
+    "sha1-base32 WARC-Payload-Digest of the payload it did NOT "
+    "re-store, plus WARC-Refers-To-Target-URI. Per doc, crawl 1's "
+    "response and crawl 2's record (unchanged docs → revisit; every "
+    "third doc changes → a fresh response) mux into one per-record-"
+    "gzip WARC and parse back. digest_ok demands the engine-computed "
+    "digest of the ORIGINAL payload equal the revisit record's header "
+    "(the exact cross-crawl match a dedup stage joins on) — for "
+    "changed docs, that the new digest header verifies AND differs "
+    "from crawl 1's; refers_ok checks the back-reference URI. "
+    "rec2_type and the stored byte count are closed-form in doc_id. "
+    "One narrow mapInPandas stage, zero shuffle.",
+)
+def src_warc_revisit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def synth_and_parse(batches):
+        from evolution_data_warehouse_spark.sources.warc import (
+            build_warc,
+            parse_warc,
+            payload_digest,
+        )
+
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                d = int(doc_id)
+                body = ("" if text is None else str(text)).encode("utf-8")
+                uri = f"http://corpus.local/doc/{d}"
+                dig1 = payload_digest(body)
+                recs = [
+                    (
+                        "response",
+                        uri,
+                        body,
+                        {"WARC-Payload-Digest": dig1},
+                    )
+                ]
+                if d % 3 == 0:
+                    body2 = body + b" v2"
+                    recs.append(
+                        (
+                            "response",
+                            uri,
+                            body2,
+                            {"WARC-Payload-Digest": payload_digest(body2)},
+                        )
+                    )
+                else:
+                    recs.append(
+                        (
+                            "revisit",
+                            uri,
+                            b"",
+                            {
+                                "WARC-Payload-Digest": dig1,
+                                "WARC-Profile": _REVISIT_PROFILE,
+                                "WARC-Refers-To-Target-URI": uri,
+                            },
+                        )
+                    )
+                parsed = parse_warc(build_warc(recs, per_record_gzip=True))
+                r1, r2 = parsed[0], parsed[1]
+                h2 = r2["headers"]
+                if r2["type"] == "revisit":
+                    digest_ok = (
+                        h2.get("warc-payload-digest")
+                        == payload_digest(r1["payload"])
+                        and r2["payload"] == b""
+                        and h2.get("warc-profile") == _REVISIT_PROFILE
+                    )
+                    refers_ok = h2.get("warc-refers-to-target-uri") == uri
+                else:
+                    digest_ok = (
+                        h2.get("warc-payload-digest")
+                        == payload_digest(r2["payload"])
+                        and h2.get("warc-payload-digest") != dig1
+                    )
+                    refers_ok = r2["uri"] == uri
+                rows.append(
+                    {
+                        "doc_id": d,
+                        "rec2_type": r2["type"],
+                        "n_bytes_2": len(r2["payload"]),
+                        "digest_ok": bool(digest_ok),
+                        "refers_ok": bool(refers_ok),
+                    }
+                )
+            yield pd.DataFrame(rows)
+
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.mapInPandas(
+        synth_and_parse,
+        "doc_id long, rec2_type string, n_bytes_2 long, "
+        "digest_ok boolean, refers_ok boolean",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sharded JSONL sink — the training-data handoff format
+# ---------------------------------------------------------------------------
+
+_JSONL_SHARDS = 8
+
+
+def _jsonl_shards_oracle() -> str:
+    from evolution_data_warehouse_spark.queries.common import bucket_sql
+
+    return f"""
+SELECT {bucket_sql('doc_id', _JSONL_SHARDS)} AS shard,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
+       CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
+FROM documents GROUP BY 1
+"""
+
+
+@register(
+    "snk_jsonl_shards",
+    _jsonl_shards_oracle(),
+    doc="Sharded JSONL export — the handoff format LLM training "
+    "toolchains actually consume (one JSON object per line, "
+    "hash-sharded files a data loader streams independently): "
+    "documents serialize with to_json, write partitioned by the "
+    "md5-derived shard (split_train_hash's bucket primitive, so "
+    "assignment is reproducible anywhere), and the query re-reads "
+    "the written TEXT files back, re-parses each line with "
+    "from_json, and aggregates per shard — counts, id checksum, and "
+    "language cardinality only prove out if serialization, sharded "
+    "layout, and re-parse are all lossless. Shard directories are "
+    "independent at 100 TB (each file a self-contained JSONL "
+    "stream); the write is one hash-partitioned pass.",
+)
+def snk_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import types as T
+    from evolution_data_warehouse_spark.operators.datapipe import (
+        hash_bucket,
+    )
+
+    path = scratch("snk_jsonl_shards", sf_dir)
+    docs = t(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "text"
+    )
+    payload = F.to_json(F.struct("doc_id", "lang", "source", "text"))
+    (
+        docs.select(
+            hash_bucket(F.col("doc_id"), _JSONL_SHARDS).alias("shard"),
+            payload.alias("value"),
+        )
+        .write.mode("overwrite")
+        .partitionBy("shard")
+        .text(path)
+    )
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("lang", T.StringType()),
+            T.StructField("source", T.StringType()),
+            T.StructField("text", T.StringType()),
+        ]
+    )
+    lines = spark.read.text(path)
+    parsed = lines.select(
+        F.from_json("value", schema).alias("r"),
+        F.input_file_name().alias("_f"),
+    ).select(
+        "r.doc_id",
+        "r.lang",
+        F.regexp_extract("_f", r"shard=(\d+)", 1)
+        .cast("bigint")
+        .alias("shard"),
+    )
+    return parsed.groupBy("shard").agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("doc_id").cast("bigint").alias("sum_doc_id"),
+        F.countDistinct("lang").cast("bigint").alias("n_langs"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Deterministic epoch-shuffle training sink — completes snk_jsonl_shards
+# + pack_curriculum with the trainer-side shuffled epoch order
+# ---------------------------------------------------------------------------
+
+# Epoch seed is pinned; a trainer would pass epoch number here. The
+# permutation rank of a doc is the 60-bit md5 key of 'epoch{seed}:id'
+# (content_hash64 — the repo's cross-engine hash primitive), so ANY
+# worker reproduces the full epoch order from ids alone, with no RNG
+# state and no coordination.
+_EPOCH_SEED = 11
+
+
+_EPOCH_SHARDS = 8
+
+
+# Shard = rank-key range: rk div 2^57 for 8 shards over the 60-bit key
+# space. md5 uniformity balances the shards by construction — no
+# sampled range boundaries (repartitionByRange samples, which is not
+# reproducible), no global sort, no driver state. Reading shard 0..7,
+# each ordered by (rk, doc_id), IS the epoch permutation.
+_EPOCH_RANGE_DIV = 1 << 57
+
+
+def _shuffled_shards_oracle() -> str:
+
+    rk = content_hash64_sql(
+        f"'epoch{_EPOCH_SEED}:' || CAST(doc_id AS VARCHAR)"
+    )
+    return f"""
+WITH r AS (
+    SELECT doc_id, {rk} AS rk FROM documents
+),
+s AS (
+    SELECT doc_id, rk, rk // {_EPOCH_RANGE_DIV} AS shard FROM r
+),
+p AS (
+    SELECT shard, doc_id, rk,
+           ROW_NUMBER() OVER (
+               PARTITION BY shard ORDER BY rk, doc_id) AS epoch_pos
+    FROM s
+)
+SELECT CAST(shard AS BIGINT) AS shard,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
+       CAST(MIN(rk) AS BIGINT) AS min_rk,
+       CAST(MAX(rk) AS BIGINT) AS max_rk,
+       CAST(SUM(epoch_pos * doc_id) AS BIGINT) AS pos_checksum,
+       CAST(0 AS BIGINT) AS n_misplaced,
+       CAST(0 AS BIGINT) AS n_bad_rk
+FROM p GROUP BY 1
+"""
+
+
+@register(
+    "snk_shuffled_shards",
+    _shuffled_shards_oracle(),
+    doc="Deterministic epoch-shuffle training sink — the trainer-side "
+    "op that completes snk_jsonl_shards + pack_curriculum: each "
+    "document's permutation rank is the 60-bit md5 key of "
+    "'epoch{seed}:doc_id', its shard is the KEY RANGE rk div 2^57 "
+    "(md5 uniformity balances shards by construction — deliberately "
+    "NOT repartitionByRange, whose sampled boundaries are not "
+    "reproducible), and shard files are written pre-sorted by "
+    "(rk, doc_id), so reading shards 0..7 in order IS the shuffled "
+    "epoch and any worker reproduces it from ids alone. The query "
+    "re-reads the written JSONL, recomputes rank and shard from the "
+    "payload, asserts the directory layout matches (n_misplaced must "
+    "be 0) and the stored ranks agree (n_bad_rk must be 0), and "
+    "emits per-shard count/id-checksum/key-range plus a "
+    "POSITIONAL checksum sum(epoch_pos*doc_id) that only matches the "
+    "oracle if the permutation is exactly right. Scale: one hash "
+    "shuffle + per-shard sort; shard count would be O(cluster "
+    "cores) at 100 TB (pinned 8 here), shards stream independently "
+    "into loaders.",
+)
+def snk_shuffled_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+    from pyspark.sql import types as T
+
+    def rank_key(doc_id_col):
+        return content_hash64(
+            F.concat(
+                F.lit(f"epoch{_EPOCH_SEED}:"), doc_id_col.cast("string")
+            )
+        )
+
+    path = scratch("snk_shuffled_shards", sf_dir)
+    docs = t(spark, sf_dir, "documents").select("doc_id", "lang")
+    keyed = docs.select(
+        "doc_id",
+        "lang",
+        rank_key(F.col("doc_id")).alias("rk"),
+    ).withColumn("shard", F.expr(f"rk DIV {_EPOCH_RANGE_DIV}"))
+    (
+        keyed.repartition(_EPOCH_SHARDS, "shard")
+        .sortWithinPartitions("shard", "rk", "doc_id")
+        .select(
+            "shard",
+            F.to_json(F.struct("doc_id", "lang", "rk")).alias("value"),
+        )
+        .write.mode("overwrite")
+        .partitionBy("shard")
+        .text(path)
+    )
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("lang", T.StringType()),
+            T.StructField("rk", T.LongType()),
+        ]
+    )
+    parsed = (
+        spark.read.text(path)
+        .select(
+            F.from_json("value", schema).alias("r"),
+            F.regexp_extract(F.input_file_name(), r"shard=(\d+)", 1)
+            .cast("bigint")
+            .alias("file_shard"),
+        )
+        .select("r.doc_id", "r.rk", "file_shard")
+    )
+    # Everything below recomputes from the payload: rank from the id,
+    # shard from the rank. The file layout (coalesced to -1 so a path
+    # that fails the shard= extraction COUNTS as misplaced instead of
+    # null-ing out of the sum) and the rank STORED in the JSONL both
+    # have to agree with the recomputation (review finding: the
+    # stored rk was previously parsed but never compared).
+    checked = parsed.select(
+        "doc_id",
+        F.coalesce("file_shard", F.lit(-1)).alias("file_shard"),
+        F.col("rk").alias("stored_rk"),
+        rank_key(F.col("doc_id")).alias("rk"),
+    ).withColumn("shard", F.expr(f"rk DIV {_EPOCH_RANGE_DIV}"))
+    pos = F.row_number().over(
+        W.partitionBy("shard").orderBy("rk", "doc_id")
+    )
+    placed = checked.withColumn("epoch_pos", pos)
+    bad_rk = F.coalesce(
+        (F.col("stored_rk") != F.col("rk")).cast("int"), F.lit(1)
+    )
+    return placed.groupBy("shard").agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("doc_id").cast("bigint").alias("sum_doc_id"),
+        F.min("rk").cast("bigint").alias("min_rk"),
+        F.max("rk").cast("bigint").alias("max_rk"),
+        F.sum(F.col("epoch_pos") * F.col("doc_id"))
+        .cast("bigint")
+        .alias("pos_checksum"),
+        F.sum((F.col("file_shard") != F.col("shard")).cast("int"))
+        .cast("bigint")
+        .alias("n_misplaced"),
+        F.sum(bad_rk).cast("bigint").alias("n_bad_rk"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Schema-evolution source read — mergeSchema over heterogeneous snapshots
+# ---------------------------------------------------------------------------
+
+_MERGESCHEMA_ORACLE = """
+SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_with_source,
+       CAST(SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_null_source,
+       CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
+       CAST(SUM(doc_id) AS BIGINT) AS id_checksum
+FROM documents
+"""
+
+
+@register(
+    "src_parquet_mergeschema",
+    _MERGESCHEMA_ORACLE,
+    doc="Schema-evolution read — the lake-format reality at 100 TB: "
+    "old partitions were written before a column existed. Two "
+    "snapshots of the corpus are written side by side (v1: even "
+    "doc_ids WITHOUT the source column — the pre-evolution schema; "
+    "v2: odd doc_ids with it), then read back as ONE relation via "
+    "spark.read.option('mergeSchema', true) — the widened schema "
+    "back-fills NULL for v1's missing column. The aggregate (row "
+    "count, non-null vs null source split exactly on the snapshot "
+    "boundary, language cardinality, id checksum) only matches the "
+    "oracle's closed-form expectation if the union, the back-fill, "
+    "and the column alignment are all correct. Note mergeSchema "
+    "reads every footer — production pins the merged schema in the "
+    "catalog instead; this query proves the mechanics the catalog "
+    "automates.",
+)
+def src_parquet_mergeschema(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    path = scratch("src_parquet_mergeschema", sf_dir)
+    docs = t(spark, sf_dir, "documents")
+    (
+        docs.filter(F.col("doc_id") % 2 == 0)
+        .select("doc_id", "lang")
+        .write.mode("overwrite")
+        .parquet(f"{path}/v1")
+    )
+    (
+        docs.filter(F.col("doc_id") % 2 == 1)
+        .select("doc_id", "lang", "source")
+        .write.mode("overwrite")
+        .parquet(f"{path}/v2")
+    )
+    merged = (
+        spark.read.option("mergeSchema", "true")
+        .option("recursiveFileLookup", "true")
+        .parquet(path)
+    )
+    return merged.agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.sum(F.col("source").isNotNull().cast("int"))
+        .cast("bigint")
+        .alias("n_with_source"),
+        F.sum(F.col("source").isNull().cast("int"))
+        .cast("bigint")
+        .alias("n_null_source"),
+        F.countDistinct("lang").cast("bigint").alias("n_langs"),
+        F.sum("doc_id").cast("bigint").alias("id_checksum"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# snk_webdataset_shards — WebDataset-style tar shard training sink
+# ---------------------------------------------------------------------------
+
+_WDS_SHARDS = 8
+
+
+# Per-sample body hashes are summed mod this prime so the checksum can
+# never overflow int64 at any corpus size (60-bit raw hashes would at
+# ~8k rows/shard).
+_WDS_MOD = 1_000_000_007
+
+
+def _wds_oracle() -> str:
+    rk = content_hash64_sql("'wds:' || CAST(doc_id AS VARCHAR)")
+    body_h = content_hash64_sql("body")
+    return f"""
+WITH k AS (
+    SELECT doc_id, COALESCE(text, '') AS body,
+           {rk} AS rk
+    FROM documents
+),
+p AS (
+    SELECT doc_id, body, rk, rk % {_WDS_SHARDS} AS shard,
+           CAST(row_number() OVER (
+               PARTITION BY rk % {_WDS_SHARDS} ORDER BY rk, doc_id
+           ) AS BIGINT) AS pos
+    FROM k
+)
+SELECT shard,
+       CAST(COUNT(*) AS BIGINT) AS n_samples,
+       CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
+       CAST(SUM(strlen(body)) AS BIGINT) AS bytes_text,
+       CAST(SUM(pos * doc_id) AS BIGINT) AS pos_checksum,
+       CAST(SUM({body_h} % {_WDS_MOD}) AS BIGINT) AS body_checksum,
+       CAST(0 AS BIGINT) AS n_bad_rk
+FROM p GROUP BY shard
+"""
+
+
+@register(
+    "snk_webdataset_shards",
+    _wds_oracle(),
+    doc="WebDataset-style tar shard training sink — the multimodal "
+    "loader format (Beaumont et al.'s img2dataset / LAION tooling "
+    "convention: one tar per shard, one sample = same-basename member "
+    "files, loaders stream tars sequentially with zero coordination). "
+    "Each document's shard is its salted md5 hash mod 8; within a "
+    "shard, samples are laid out in (rank, doc_id) order and written "
+    "as {doc_id}.txt (the body) + {doc_id}.json (metadata incl. the "
+    "rank key) with pinned mtime/uid so the tar bytes are fully "
+    "deterministic. The writer is one applyInPandas per shard group "
+    "(atomic tmp+rename, so task retries are idempotent); the reader "
+    "re-opens every tar in a second Arrow stage, walks members IN TAR "
+    "ORDER, recomputes the rank from the payload, and checks the "
+    "stored rank (n_bad_rk must be 0). The emitted per-shard count / "
+    "id / byte / POSITIONAL checksums only match the oracle if shard "
+    "assignment, sample order, and bodies are all exactly right. "
+    "Scale: shard count would be O(cluster cores) at 100 TB (pinned "
+    "8 here); each shard writes and verifies independently — no "
+    "global sort, no driver data path.",
+)
+def snk_webdataset_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import io
+    import json
+    import shutil
+    import tarfile
+    import tempfile
+    from hashlib import md5
+
+    base = scratch("snk_webdataset_shards", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base, exist_ok=True)
+
+    docs = t(spark, sf_dir, "documents").select(
+        "doc_id", F.coalesce("text", F.lit("")).alias("body")
+    )
+    keyed = docs.select(
+        "doc_id",
+        "body",
+        content_hash64(
+            F.concat(F.lit("wds:"), F.col("doc_id").cast("string"))
+        ).alias("rk"),
+    ).withColumn("shard", F.col("rk") % _WDS_SHARDS)
+
+    def _write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = int(pdf["shard"].iloc[0])
+        pdf = pdf.sort_values(["rk", "doc_id"])
+        path = os.path.join(base, f"shard-{shard:05d}.tar")
+        fd, tmp = tempfile.mkstemp(dir=base, suffix=".tmp")
+        with os.fdopen(fd, "wb") as fh:
+            with tarfile.open(fileobj=fh, mode="w") as tar:
+                for doc_id, body, rk in zip(
+                    pdf["doc_id"], pdf["body"], pdf["rk"]
+                ):
+                    key = f"{int(doc_id):012d}"
+                    txt = str(body).encode("utf-8")
+                    meta = json.dumps(
+                        {"doc_id": int(doc_id), "rk": int(rk)},
+                        sort_keys=True,
+                    ).encode("utf-8")
+                    for suffix, payload in ((".txt", txt), (".json", meta)):
+                        info = tarfile.TarInfo(name=key + suffix)
+                        info.size = len(payload)
+                        info.mtime = 0  # pinned: byte-deterministic tars
+                        tar.addfile(info, io.BytesIO(payload))
+        os.replace(tmp, path)  # atomic publish — retries are idempotent
+        return pd.DataFrame(
+            {"shard": [shard], "path": [path], "n": [len(pdf)]}
+        )
+
+    manifest = (
+        keyed.repartition(_WDS_SHARDS, "shard")
+        .groupBy("shard")
+        .applyInPandas(_write_shard, "shard bigint, path string, n bigint")
+    )
+
+    def _read_shards(batches):
+        for pdf in batches:
+            out = {
+                "shard": [],
+                "pos": [],
+                "doc_id": [],
+                "octet_len": [],
+                "body_h": [],
+                "bad_rk": [],
+            }
+            for shard, path in zip(pdf["shard"], pdf["path"]):
+                with tarfile.open(path, "r") as tar:
+                    pos = 0
+                    pending: dict[str, bytes] = {}
+                    for member in tar:
+                        key, suffix = os.path.splitext(member.name)
+                        payload = tar.extractfile(member).read()
+                        pending[suffix] = payload
+                        if len(pending) < 2:
+                            continue
+                        # one full sample (.txt + .json) collected
+                        pos += 1
+                        body = pending[".txt"]
+                        meta = json.loads(pending[".json"])
+                        pending = {}
+                        doc_id = int(key)
+                        expect_rk = int(
+                            md5(f"wds:{doc_id}".encode()).hexdigest()[:15],
+                            16,
+                        )
+                        bad = (
+                            int(meta["doc_id"]) != doc_id
+                            or int(meta["rk"]) != expect_rk
+                        )
+                        out["shard"].append(int(shard))
+                        out["pos"].append(pos)
+                        out["doc_id"].append(doc_id)
+                        out["octet_len"].append(len(body))
+                        out["body_h"].append(
+                            int(md5(body).hexdigest()[:15], 16) % _WDS_MOD
+                        )
+                        out["bad_rk"].append(1 if bad else 0)
+            yield pd.DataFrame(out)
+
+    samples = manifest.repartition(_WDS_SHARDS).mapInPandas(
+        _read_shards,
+        "shard bigint, pos bigint, doc_id bigint, octet_len bigint, "
+        "body_h bigint, bad_rk bigint",
+    )
+    return samples.groupBy("shard").agg(
+        F.count("*").cast("bigint").alias("n_samples"),
+        F.sum("doc_id").cast("bigint").alias("sum_doc_id"),
+        F.sum("octet_len").cast("bigint").alias("bytes_text"),
+        F.sum(F.col("pos") * F.col("doc_id"))
+        .cast("bigint")
+        .alias("pos_checksum"),
+        F.sum("body_h").cast("bigint").alias("body_checksum"),
+        F.sum("bad_rk").cast("bigint").alias("n_bad_rk"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# src_xml_roundtrip — native XML datasource (Spark 4 built-in)
+# ---------------------------------------------------------------------------
+
+_XML_ORACLE = """
+SELECT n.n_regionkey, r.r_name,
+       CAST(COUNT(*) AS BIGINT) AS n_nations,
+       CAST(SUM(n.n_nationkey) AS BIGINT) AS sum_nationkey
+FROM nation n JOIN region r ON r.r_regionkey = n.n_regionkey
+GROUP BY n.n_regionkey, r.r_name
+"""
+
+
+@register(
+    "src_xml_roundtrip",
+    _XML_ORACLE,
+    doc="XML source/sink round-trip via Spark 4's NATIVE xml datasource "
+    "(spark-xml was merged into core in 4.0 — no external package): "
+    "the nation-region join is written as <rows><row>...</row></rows> "
+    "documents, read back with an EXPLICIT schema (never inference — "
+    "schema drift must fail loudly, and an inference pass is a second "
+    "full scan at 100 TB), and aggregated per region. The aggregate "
+    "only matches the oracle if the XML writer/parser preserved every "
+    "row and type. Dimension-sized here by design: XML is a feed "
+    "format for reference data, not a fact-table format.",
+)
+def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import types as T
+
+    path = scratch("src_xml_roundtrip", sf_dir)
+    n = t(spark, sf_dir, "nation")
+    r = t(spark, sf_dir, "region")
+    joined = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).select(
+        "n_nationkey", "n_regionkey", "r_name"
+    )
+    (
+        joined.coalesce(1)
+        .write.mode("overwrite")
+        .format("xml")
+        .option("rootTag", "rows")
+        .option("rowTag", "row")
+        .save(path)
+    )
+    schema = T.StructType(
+        [
+            T.StructField("n_nationkey", T.IntegerType()),
+            T.StructField("n_regionkey", T.IntegerType()),
+            T.StructField("r_name", T.StringType()),
+        ]
+    )
+    back = (
+        spark.read.format("xml")
+        .option("rowTag", "row")
+        .schema(schema)
+        .load(path)
+    )
+    return back.groupBy("n_regionkey", "r_name").agg(
+        F.count("*").cast("bigint").alias("n_nations"),
+        F.sum("n_nationkey").cast("bigint").alias("sum_nationkey"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# src_python_datasource — custom Python DataSource (Spark 4 API)
+# ---------------------------------------------------------------------------
+
+_SYNTH_N = 100_000
+
+
+_SYNTH_PARTS = 8
+
+
+def _pyds_oracle() -> str:
+    from evolution_data_warehouse_spark.sources.pydatasource import (
+        SYNTH_MOD,
+        SYNTH_MULT,
+    )
+
+    return f"""
+WITH rows AS (
+    SELECT g AS row_id,
+           CAST(g % {_SYNTH_PARTS} AS INT) AS part_id,
+           (g * {SYNTH_MULT}) % {SYNTH_MOD} AS val
+    FROM generate_series(0, {_SYNTH_N - 1}) t(g)
+)
+SELECT part_id,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(val) AS BIGINT) AS sum_val,
+       CAST(MIN(row_id) AS BIGINT) AS min_row,
+       CAST(MAX(row_id) AS BIGINT) AS max_row,
+       CAST(SUM((row_id * val) % {SYNTH_MOD}) AS BIGINT) AS mix_checksum
+FROM rows GROUP BY part_id
+"""
+
+
+@register(
+    "src_python_datasource",
+    _pyds_oracle(),
+    doc="Custom Python DataSource via Spark 4's official "
+    "pyspark.sql.datasource extension API (sources/pydatasource.py) — "
+    "the sanctioned way to teach Spark a source only Python can read "
+    "(bespoke feeds, internal formats), superseding driver-side "
+    "collect-then-parallelize loaders. The source PLANS one "
+    "InputPartition per round-robin slice and each task generates "
+    "only its own rows, so the scan parallelizes like a file source "
+    "(no driver data path); the per-partition min/max/count/checksum "
+    "aggregate only matches the oracle's generate_series replay if "
+    "every partition produced exactly its slice — a partition-"
+    "planning bug (dup/missing/shifted slice) breaks min_row/"
+    "max_row/mix_checksum. Row values are int64 Knuth-hash "
+    "arithmetic kept below 2^63 (both engines exact).",
+)
+def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from evolution_data_warehouse_spark.sources.pydatasource import (
+        SYNTH_MOD,
+        register_synth_source,
+    )
+
+    register_synth_source(spark)
+    df = (
+        spark.read.format("synthrange")
+        .option("n", _SYNTH_N)
+        .option("parts", _SYNTH_PARTS)
+        .load()
+    )
+    return df.groupBy("part_id").agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.sum("val").cast("bigint").alias("sum_val"),
+        F.min("row_id").cast("bigint").alias("min_row"),
+        F.max("row_id").cast("bigint").alias("max_row"),
+        F.sum((F.col("row_id") * F.col("val")) % SYNTH_MOD)
+        .cast("bigint")
+        .alias("mix_checksum"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# snk_python_datasource — custom Python DataSource WRITER (2-phase commit)
+# ---------------------------------------------------------------------------
+
+_PYSNK_ORACLE = """
+SELECT lang,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id
+FROM documents GROUP BY lang
+"""
+
+
+@register(
+    "snk_python_datasource",
+    _PYSNK_ORACLE,
+    doc="Custom Python DataSource WRITER via Spark 4's "
+    "pyspark.sql.datasource API (sources/pydatasource.py JsonlSink) — "
+    "the sink-side twin of src_python_datasource, demonstrating the "
+    "API's TWO-PHASE COMMIT protocol: every task publishes a "
+    "uniquely-named file via tmp + atomic rename and returns a "
+    "commit message; only the driver-side commit() writes the "
+    "manifest that makes work visible. The query re-reads ONLY the "
+    "manifest-listed files (uncommitted or retried-task orphans are "
+    "invisible by construction — the exactly-once story object "
+    "stores need) and aggregates per language; the totals only "
+    "match the oracle if no task output was lost or double-counted. "
+    "Scale: tasks write independently, commit is O(tasks) metadata "
+    "— the same shape as a Hadoop commit protocol.",
+)
+def snk_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+
+    from pyspark.sql import types as T
+
+    from evolution_data_warehouse_spark.sources.pydatasource import (
+        read_manifest,
+        register_jsonl_sink,
+    )
+
+    register_jsonl_sink(spark)
+    base = scratch("snk_python_datasource", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base, exist_ok=True)
+    docs = t(spark, sf_dir, "documents").select("doc_id", "lang")
+    (
+        docs.repartition(8, "doc_id")
+        .write.format("jsonlsink")
+        .option("path", base)
+        .mode("append")
+        .save()
+    )
+    manifest = read_manifest(base)
+    files = [os.path.join(base, f) for f in manifest["files"]]
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("lang", T.StringType()),
+        ]
+    )
+    if not files:  # empty input relation → manifest lists zero files
+        back = spark.createDataFrame([], schema)
+    else:
+        back = spark.read.schema(schema).json(files)
+    return back.groupBy("lang").agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("doc_id").cast("bigint").alias("sum_doc_id"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# snk_partitioned_prune — hive-partitioned sink + partition-pruned re-read
+# ---------------------------------------------------------------------------
+
+_PART_PRUNE_VALUE = "1-URGENT"
+
+
+_PART_PRUNE_ORACLE = f"""
+SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
+FROM orders WHERE o_orderpriority = '{_PART_PRUNE_VALUE}'
+"""
+
+
+@register(
+    "snk_partitioned_prune",
+    _PART_PRUNE_ORACLE,
+    doc="Hive-partitioned parquet sink + partition-pruned re-read: the "
+    "table is written partitionBy(o_orderpriority) (one directory per "
+    "value) and re-read with an equality filter on the partition "
+    "column, so the scan lists and reads ONLY the matching directory — "
+    "pruning happens at FILE LISTING time, before any footer or page "
+    "IO (the directory-layout half of the story next to "
+    "snk_clustered_prune's footer-stats half; at 100 TB, partition "
+    "pruning is what turns a full-table scan into a 1/N-of-the-table "
+    "scan for time/tenant/priority-scoped queries). The plan carries "
+    "the filter as PartitionFilters on the scan (locked in "
+    "tests/test_plan_invariants.py). Round-trip values are "
+    "oracle-checked against the unpartitioned source.",
+)
+def snk_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    orders = t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
+    )
+    target = scratch("snk_partitioned", sf_dir)
+    orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(
+        target
+    )
+    return (
+        spark.read.parquet(target)
+        .filter(F.col("o_orderpriority") == _PART_PRUNE_VALUE)
+        .select(
+            "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# src_jsonl_quarantine — permissive JSONL ingest with corrupt routing
+# ---------------------------------------------------------------------------
+
+_JSONL_BAD_MOD = 11  # every 11th doc id emits a syntactically broken line
+
+
+_JSONL_ORACLE = f"""
+SELECT CASE WHEN doc_id % {_JSONL_BAD_MOD} = 0 THEN NULL
+       ELSE doc_id END AS doc_id,
+       CASE WHEN doc_id % {_JSONL_BAD_MOD} = 0 THEN NULL
+       ELSE n_chars END AS n_chars,
+       (doc_id % {_JSONL_BAD_MOD} = 0) AS is_corrupt
+FROM documents
+"""
+
+
+@register(
+    "src_jsonl_quarantine",
+    _JSONL_ORACLE,
+    doc="Error-tolerant JSONL ingestion: a landing file where one line "
+    "in 11 is SYNTACTICALLY broken JSON (truncated object — the "
+    "structural failure class src_csv_permissive's bad-cell case "
+    "doesn't cover: here the whole record is unparseable, not one "
+    "field) read in PERMISSIVE mode with columnNameOfCorruptRecord — "
+    "broken lines surface as all-null rows with the raw text "
+    "preserved in the corrupt column for the quarantine path, instead "
+    "of killing the load (FAILFAST) or silently vanishing "
+    "(DROPMALFORMED). At 100 TB of crawled JSONL, a per-record "
+    "quarantine is the only ingestion contract that survives reality. "
+    "The oracle reconstructs the expected parse/corrupt pattern from "
+    "the synthesis rule (nulls for broken lines, parsed values "
+    "elsewhere).",
+)
+def src_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+    path = scratch("src_jsonl_quarantine", sf_dir)
+    docs = t(spark, sf_dir, "documents")
+    good = F.concat(
+        F.lit('{"doc_id": '),
+        F.col("doc_id").cast("string"),
+        F.lit(', "n_chars": '),
+        F.col("n_chars").cast("string"),
+        F.lit("}"),
+    )
+    broken = F.concat(  # no closing brace: structurally invalid JSON
+        F.lit('{"doc_id": '),
+        F.col("doc_id").cast("string"),
+        F.lit(', "n_chars": '),
+    )
+    docs.select(
+        F.when(F.col("doc_id") % _JSONL_BAD_MOD == 0, broken)
+        .otherwise(good)
+        .alias("value")
+    ).write.mode("overwrite").text(path)
+    raw = (
+        spark.read.schema("doc_id long, n_chars long, _bad string")
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_bad")
+        .json(path)
+    )
+    return raw.select(
+        "doc_id", "n_chars", F.col("_bad").isNotNull().alias("is_corrupt")
+    )

@@ -68,8 +68,12 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # GATED on source bytes (r15, verdict item 3): q3's orders filter
     # keeps most of orders, so at 100 TB this branch is fact-scale and
     # a hard hint would OOM — past 256 MB of source the hint vanishes
-    # and AQE picks the strategy from measured sizes.
-    dim = orders.join(F.broadcast(cust), cust.c_custkey == orders.o_custkey)
+    # and AQE picks the strategy from measured sizes. The inner customer
+    # hint is gated the same way: customer scales with the SF too.
+    dim = orders.join(
+        gated_broadcast(cust, sf_dir, "customer"),
+        cust.c_custkey == orders.o_custkey,
+    )
     return (
         li.join(
             gated_broadcast(dim, sf_dir, "orders", "customer"),
@@ -118,15 +122,19 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Star orientation (same rationale as tpch_q3): probe from the fact,
     # never broadcast lineitem. The orders ⋈ customer branch hint is
     # gated on source bytes like q3's — the 1-year orders filter still
-    # leaves a fact-scale branch at 100 TB.
-    dim = orders.join(F.broadcast(cust), cust.c_custkey == orders.o_custkey)
+    # leaves a fact-scale branch at 100 TB. The inner customer and
+    # supplier hints are gated too: both tables scale with the SF.
+    dim = orders.join(
+        gated_broadcast(cust, sf_dir, "customer"),
+        cust.c_custkey == orders.o_custkey,
+    )
     return (
         li.join(
             gated_broadcast(dim, sf_dir, "orders", "customer"),
             dim.o_orderkey == li.l_orderkey,
         )
         .join(
-            F.broadcast(supp),
+            gated_broadcast(supp, sf_dir, "supplier"),
             (li.l_suppkey == supp.s_suppkey)
             & (cust.c_nationkey == supp.s_nationkey),
         )

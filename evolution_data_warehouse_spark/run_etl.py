@@ -67,7 +67,9 @@ def main(argv: list[str] | None = None) -> int:
         "departement_code string, population long",
     )
 
-    report, validations = run_full_etl(spark, specs, args.out, communes)
+    report, validations = run_full_etl(
+        spark, specs, args.out, communes, skip=args.skip
+    )
     payload = report.as_dict()
     payload["validations"] = [
         {"name": v.name, "violations": v.violations, "ok": v.ok}

@@ -10,6 +10,7 @@ object storage and the same code runs on a cluster.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -25,7 +26,11 @@ from evolution_data_warehouse_spark.operators.security import (
     build_zones,
 )
 from evolution_data_warehouse_spark.pipeline import Step, run_pipeline
-from evolution_data_warehouse_spark.sources.staging import TableSpec, prepare_tables
+from evolution_data_warehouse_spark.sources.staging import (
+    TableSpec,
+    prepare_tables,
+    tables_summary,
+)
 from evolution_data_warehouse_spark.warehouse import dimensions as dims_mod
 from evolution_data_warehouse_spark.warehouse import facts as facts_mod
 
@@ -52,20 +57,17 @@ def write_fact_incremental(
     an overwrite only replaces the partitions present in ``df`` — re-running
     one period never clobbers the others. The 100 TB idiom for incremental
     fact loads (facts are partitioned by the time key, mirroring the
-    reference's composite fact indexes, 003_create_facts.sql:39-42)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    reference's composite fact indexes, 003_create_facts.sql:39-42).
+    The mode is a per-write option, so the session configuration (and
+    any concurrent writer on the same session) is untouched."""
     obs = Observation()
-    try:
-        (
-            df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.mode("overwrite")
-            .partitionBy(partition_by)
-            .parquet(os.path.join(out_dir, name))
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_by)
+        .parquet(os.path.join(out_dir, name))
+    )
     return int(obs.get["rows"])
 
 
@@ -74,27 +76,23 @@ def run_full_etl(
     specs: list[TableSpec],
     out_dir: str,
     communes: DataFrame | None = None,
+    skip: Sequence[str] = (),
 ) -> tuple:
-    """Returns (PipelineReport, validation results)."""
+    """Returns (PipelineReport, validation results). Steps named in
+    ``skip`` are reported SKIP and not run (their dependents still run,
+    as after a successful step)."""
     log_dir = os.path.join(out_dir, "log_etl")
     state: dict = {}
 
     def staging() -> int:
         with logged_step(spark, log_dir, "staging", "all") as info:
             state["staged"] = prepare_tables(spark, specs)
-            # Log-only row total: one job over a union of 1-row
-            # aggregates, not one count() job per table.
-            counts = [
-                df.agg(F.count(F.lit(1)).alias("n"))
-                for df in state["staged"].values()
-            ]
-            if not counts:
-                info["lignes"] = 0
-                return 0
-            total = counts[0]
-            for c in counts[1:]:
-                total = total.unionAll(c)
-            info["lignes"] = sum(r.n for r in total.collect())
+            # Log-only row total: one job, not one count() per table.
+            info["lignes"] = (
+                sum(r.n_rows for r in tables_summary(state["staged"]).collect())
+                if state["staged"]
+                else 0
+            )
             return info["lignes"]
 
     def security() -> int:
@@ -179,7 +177,8 @@ def run_full_etl(
             Step("dimensions", dimensions, depends_on=["staging"]),
             Step("facts", facts, depends_on=["dimensions"]),
             Step("refresh", refresh, depends_on=["facts"]),
-        ]
+        ],
+        skip=skip,
     )
 
     validations = []

@@ -183,9 +183,7 @@ def test_corpus_prep_end_to_end(spark, sf_dir):
         hash_split,
         pack_contiguous,
     )
-    from evolution_data_warehouse_spark.queries.datapipe import (
-        _shingles_with_source,
-    )
+    from evolution_data_warehouse_spark.queries.common import doc_shingles
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -206,7 +204,7 @@ def test_corpus_prep_end_to_end(spark, sf_dir):
     )
 
     # 2. decontaminate against the src0 slice (stand-in eval set)
-    sh = _shingles_with_source(spark, sf_dir)
+    sh = doc_shingles(spark, sf_dir, "source")
     bench = sh.filter(F.col("source") == "src0").select("shingle")
     cand = (
         sh.join(deduped.select("doc_id"), "doc_id")

@@ -357,7 +357,7 @@ def test_minhash_bands_checkpoint_output_identical(spark):
 
 
 def _word_shingles(docs):
-    """3-gram word shingles, same recipe as queries/llm_ops."""
+    """3-gram word shingles, same recipe as queries/common.py::doc_shingles."""
     from pyspark.sql import functions as F
 
     toks = F.split(F.lower(F.col("text")), " ")
@@ -483,7 +483,7 @@ def test_ivf_multiprobe_recall_monotone(spark, sf_dir):
         ivf_assign,
         with_norm,
     )
-    from evolution_data_warehouse_spark.queries.llm_ops import _KM_CENTROIDS
+    from evolution_data_warehouse_spark.queries.similarity import _KM_CENTROIDS
 
     K, N_QUERIES = 10, 20
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1249,11 +1249,11 @@ def test_minhash_recall_vs_exact_jaccard(spark):
         content_hash64,
         minhash_lsh_pairs,
     )
-    from evolution_data_warehouse_spark.queries.llm_ops import _doc_shingles
+    from evolution_data_warehouse_spark.queries.common import doc_shingles
 
     sf_dir = "/root/testdata/sf0.001"
     sh = (
-        _doc_shingles(spark, sf_dir)
+        doc_shingles(spark, sf_dir)
         .select("doc_id", content_hash64(F.col("shingle")).alias("h"))
         .localCheckpoint(eager=True)
     )
@@ -1288,7 +1288,7 @@ def test_minhash_recall_vs_exact_jaccard(spark):
 
     cand = {
         (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(_doc_shingles(spark, sf_dir))
+        for r in minhash_lsh_pairs(doc_shingles(spark, sf_dir))
         .select("doc_a", "doc_b")
         .collect()
     }
@@ -3267,6 +3267,12 @@ def test_semantic_dedup_grouped_path_matches_join_path(spark):
         (7, 2, [float("nan"), 1.0, 1.0, 1.0]),
         (8, 2, [0.1, 0.2, 0.3, 0.4]),
         (9, 2, [0.1, 0.2, 0.3, 0.41]),
+        # duplicate ids in one slice: a duplicate never pairs with its
+        # own id, and the counts of both rows sum under that id (the
+        # join path's _ida != _idb + groupBy("_ida"))
+        (3, 1, [0.998, 0.02, 0.0, 0.0]),
+        (9, 2, [0.1, 0.2, 0.31, 0.4]),
+        (9, 2, [0.1, 0.21, 0.3, 0.4]),
     ]
     df = spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<double>"

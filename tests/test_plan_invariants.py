@@ -209,6 +209,31 @@ def test_star_orientation_fact_never_broadcast(spark, sf_dir, name):
         )
 
 
+@pytest.mark.parametrize("name", ["tpch_q3", "tpch_q5"])
+def test_star_dim_hints_respect_broadcast_gate(spark, sf_dir, monkeypatch, name):
+    """Past the source-size gate no scaling dimension is broadcast: with
+    the gate below every source size (and size-based auto-broadcast
+    off, so only hints can broadcast) neither the customer nor the
+    supplier scan may sit under a BroadcastExchange — the inner hints
+    are gated like the composite orders ⋈ customer branch."""
+    from evolution_data_warehouse_spark.queries import common
+
+    monkeypatch.setattr(common, "BROADCAST_GATE_BYTES", 1)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = REGISTRY[name].fn(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    for sub in _broadcast_subtrees(plan):
+        for table in ("c_custkey", "s_suppkey"):
+            assert table not in sub, (
+                f"{name}: {table} source broadcast past the gate:\n{sub}"
+            )
+
+
 def test_spatial_grid_join_is_cell_keyed_broadcast(spark, sf_dir):
     """The radius join must go through the (cx, cy) grid-cell equi-join
     — BroadcastHashJoin on cell keys, never a nested-loop over the
@@ -288,13 +313,13 @@ def test_minhash_guard_shares_pair_join_exchange(spark, sf_dir):
     from evolution_data_warehouse_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
-    from evolution_data_warehouse_spark.queries.llm_ops import _doc_shingles
+    from evolution_data_warehouse_spark.queries.common import doc_shingles
 
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         df = minhash_lsh_pairs(
-            _doc_shingles(spark, sf_dir), bands_storage="none"
+            doc_shingles(spark, sf_dir), bands_storage="none"
         )
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:

@@ -114,8 +114,22 @@ def test_read_api(spark, sf_dir):
     with pytest.raises(PermissionError):
         api.get_table("lineitem")
 
-    summary = {s["table"]: s for s in api.summary()}
-    assert summary["region_api"]["n_rows"] == 5
+    # every allowed table is counted in ONE job, not one count() each
+    # (AQE off: it would submit each shuffle map stage as its own job)
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("api_summary_probe", "summary probe")
+    try:
+        summary = api.summary()
+    finally:
+        sc.setJobGroup("api_other", "")
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(sc.statusTracker().getJobIdsForGroup("api_summary_probe")) == 1
+    assert summary == [
+        {"table": n, "n_rows": rows, "n_cols": len(spark.table(n).columns)}
+        for n, rows in (("nation_api", 25), ("region_api", 5))
+    ]
 
     # WSGI surface
     captured = {}

@@ -120,6 +120,27 @@ def test_full_etl_end_to_end(spark, tmp_path_factory):
     assert pop.count() > 0
 
 
+def test_run_etl_skip_reaches_pipeline(spark, tmp_path, capsys, monkeypatch):
+    """`run_etl --skip security` reports the step SKIP and writes no
+    security_* tables; the rest of the cascade still runs."""
+    import json
+    import os
+
+    from evolution_data_warehouse_spark import run_etl, session
+
+    # the CLI builds its own session; hand it the test session as is
+    # (get_spark would re-apply the engine confs to the shared session)
+    monkeypatch.setattr(session, "get_spark", lambda **_: spark)
+    out = str(tmp_path / "wh")
+    rc = run_etl.main(["--demo", "--out", out, "--skip", "security"])
+    report = json.loads(capsys.readouterr().out)
+    statuses = {s["name"]: s["status"] for s in report["steps"]}
+    assert statuses["security"] == "SKIP", statuses
+    assert statuses["dimensions"] == statuses["facts"] == "OK", statuses
+    assert not [d for d in os.listdir(out) if d.startswith("security_")]
+    assert rc == 0
+
+
 def test_incremental_fact_partition_overwrite(spark, tmp_path):
     from evolution_data_warehouse_spark.warehouse.etl import (
         write_fact_incremental,

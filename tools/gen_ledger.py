@@ -9,8 +9,6 @@ Usage: python tools/gen_ledger.py
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import re
 import sys
@@ -21,23 +19,9 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     from evolution_data_warehouse_spark.queries import REGISTRY
+    from evolution_data_warehouse_spark.queries.common import latest_verdicts
 
-    latest: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(f"{REPO}/CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"_r(\d+)", path).group(1))
-        with open(path) as f:
-            data = json.load(f)
-        for name, rec in data.items():
-            ok = (
-                rec.get("err") is None
-                and rec.get("rows_match")
-                and rec.get("schema_match") is not False
-                and rec.get("hash_match") is not False
-            )
-            # keep the highest round, not file order (lexicographic
-            # glob order breaks at r10 vs r2 / r100 vs r99)
-            if name not in latest or rnd >= latest[name][0]:
-                latest[name] = (rnd, bool(ok))
+    latest = latest_verdicts()
 
     rows = []
     n_pass = n_err = n_never = 0
